@@ -21,3 +21,7 @@ UDFs — never row-at-a-time Python.
 """
 
 __version__ = "0.1.0"
+
+from parallel_dataflow_spark.pkgzip import install_zip_dir_cache  # noqa: E402
+
+install_zip_dir_cache()

@@ -2164,7 +2164,7 @@ def cep_token_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cep_token_pattern_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ACTUAL streaming CEP path, driver-graded: the same planted input
     replayed as a file stream (8 in-event-time-order chunks, 1 file per
-    micro-batch), matched with applyInPandasWithState keyed NFA state +
+    micro-batch), matched with applyInPandasWithState key-group NFA state +
     buffer-until-watermark release, flushed by a far-future sentinel, and
     read back from the sink. Shares cep_token_pattern's SQL oracle — a
     hash match proves stream == batch == independent SQL derivation (the
@@ -2193,10 +2193,11 @@ def cep_token_pattern_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = read_sequence_stream(spark, src, max_files_per_trigger=1)
     matches = match_pattern_stream(stream, _cep_pattern(), watermark="5 minutes")
     qname = f"cep_stream_{uuid.uuid4().hex[:8]}"
-    # 40 keys of state: pin the state/shuffle partition count for this job
-    # (a 200-partition harness default would run 200 state tasks per
-    # micro-batch); restored after — the partitioning is fixed at the
-    # query's FIRST start and persists in its checkpoint
+    # at most KEY_GROUPS (64) keys of state: pin the state/shuffle
+    # partition count for this job (a 200-partition harness default would
+    # run 200 state tasks per micro-batch); restored after — the
+    # partitioning is fixed at the query's FIRST start and persists in its
+    # checkpoint
     old_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:

@@ -2,21 +2,27 @@
 
 Pattern model: an ordered list of steps; each step is a set of token ids.
 A row (one sequence arrival) satisfies a step if its token array contains
-any of the step's tokens (vectorized ``np.isin`` per Arrow batch). A match
-is rows r1 < r2 < ... < rk in event-time order, one per step, consecutive
-rows within ``gap_seconds``. Skip-till-next-match semantics; overlapping
-starts allowed up to ``max_partials`` per key.
+any of the step's tokens (``arrays_overlap`` in the JVM pre-stage,
+``cep_prestage``). A match is rows r1 < r2 < ... < rk in event-time
+order, one per step, consecutive rows within ``gap_seconds``.
+Skip-till-next-match semantics; overlapping starts allowed up to
+``max_partials`` per doc.
 
-Determinism under micro-batching: rows are buffered in keyed state and
-released through the NFA only once the event-time watermark passes them,
-in strict (event_ts, checksum) order — so the match set is independent of
-how the stream is chopped into batches or partitioned across executors.
-This is the streaming re-expression of the reference's
+Determinism under micro-batching: rows are buffered in state and released
+through the NFA only once the event-time watermark passes them, per doc in
+strict (event_ts, checksum) order — so the match set is independent of how
+the stream is chopped into batches or partitioned across executors. This
+is the streaming re-expression of the reference's
 confluence-under-scheduling property (any worklist order → same fixpoint,
 impls/src/bin/test.rs:21-70).
 
-State is held in ``applyInPandasWithState`` (keyed state store, checkpoint-
-backed) with event-time timeout to flush the tail when the stream ends.
+State is held in ``applyInPandasWithState`` (checkpoint-backed state store)
+with an event-time timeout to flush the tail when the stream ends. It is
+keyed by key group, ``pmod(xxhash64(doc_id), KEY_GROUPS)``, not by doc:
+each group's state holds the per-doc buffers and partial matches of all
+its docs, so a micro-batch costs at most ``KEY_GROUPS`` kernel calls
+however many docs it touches (the key groups of Flink's state backend).
+The NFA still runs per doc, so the output is the same as per-doc state.
 """
 
 from __future__ import annotations
@@ -28,6 +34,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# Part of the checkpointed state layout: a checkpoint written with another
+# value maps docs to other groups and cannot be resumed.
+KEY_GROUPS = 64
 
 
 @dataclass(frozen=True)
@@ -50,11 +60,15 @@ MATCH_SCHEMA = T.StructType(
     ]
 )
 
+# One state row per key group: buffered rows and partial matches of all its
+# docs as parallel arrays (buf_* one entry per row, p_* one per partial).
 STATE_SCHEMA = T.StructType(
     [
+        T.StructField("buf_doc", T.ArrayType(T.StringType())),
         T.StructField("buf_ts", T.ArrayType(T.LongType())),    # epoch micros
         T.StructField("buf_mask", T.ArrayType(T.IntegerType())),
         T.StructField("buf_ck", T.ArrayType(T.LongType())),    # _ck_col(tokens)
+        T.StructField("p_doc", T.ArrayType(T.StringType())),
         T.StructField("p_state", T.ArrayType(T.IntegerType())),
         T.StructField("p_start", T.ArrayType(T.LongType())),
         T.StructField("p_last", T.ArrayType(T.LongType())),
@@ -73,9 +87,33 @@ def _ck_col(tokens) -> F.Column:
     return md5_60bit(F.concat_ws(",", tokens.cast("array<string>")))
 
 
+def cep_prestage(df: DataFrame, pattern: Pattern) -> DataFrame:
+    """JVM-side pre-stage of every CEP path (stream, TWS, batch twin): per
+    row, the NFA step bitmask (bit i set iff tokens ∩ step_i ≠ ∅ —
+    arrays_overlap against the step's literal id set) and the cross-engine
+    release-order checksum. Token arrays die here, before any exchange;
+    the stateful stage sees 3 small numerics. Each step's id set is one SQL
+    array literal (one py4j call, not one per id)."""
+    mask = F.lit(0)
+    for i, step in enumerate(pattern.steps):
+        ids = ", ".join(str(int(t)) for t in sorted(step))
+        step_arr = F.expr(f"array({ids})").cast("array<bigint>")
+        mask = mask + F.when(
+            F.arrays_overlap(F.col("tokens").cast("array<bigint>"), step_arr),
+            F.lit(1 << i),
+        ).otherwise(F.lit(0))
+    return df.select(
+        "doc_id",
+        "event_ts",
+        mask.cast("int").alias("mask"),
+        _ck_col(F.col("tokens")).alias("ck"),
+    )
+
+
 def row_step_mask(tokens_series: pd.Series, pattern: Pattern) -> np.ndarray:
-    """Bitmask per row: bit i set if the row satisfies step i. Vectorized
-    per step over the batch."""
+    """Numpy twin of ``cep_prestage``'s mask: bit i set if the row satisfies
+    step i. No query path uses it; it is the golden the pre-stage is
+    checked against."""
     n = len(tokens_series)
     mask = np.zeros(n, dtype=np.int32)
     arrs = [np.asarray(a, dtype=np.int64) for a in tokens_series]
@@ -88,6 +126,10 @@ def row_step_mask(tokens_series: pd.Series, pattern: Pattern) -> np.ndarray:
         )
         mask |= hit.astype(np.int32) << i
     return mask
+
+
+def _epoch_us(event_ts: pd.Series) -> np.ndarray:
+    return event_ts.astype("datetime64[us]").astype(np.int64).to_numpy()
 
 
 def advance_nfa(
@@ -140,27 +182,15 @@ def match_pattern_batch(df: DataFrame, pattern: Pattern) -> DataFrame:
     executor plays in the reference)."""
 
     def per_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["event_ts", "__ck"], kind="mergesort")
-        ts = pdf["event_ts"].astype("datetime64[us]").astype(np.int64).to_numpy()
-        mask = row_step_mask(pdf["tokens"], pattern)
-        p_state: list[int] = []
-        p_start: list[int] = []
-        p_last: list[int] = []
-        matches = advance_nfa(pattern, ts, mask, p_state, p_start, p_last)
-        if not matches:
-            return pd.DataFrame(columns=["doc_id", "match_start_ts", "match_end_ts", "n_steps"])
-        doc = pdf["doc_id"].iloc[0]
+        pdf = pdf.sort_values(["event_ts", "ck"], kind="mergesort")
+        matches = advance_nfa(
+            pattern, _epoch_us(pdf["event_ts"]), pdf["mask"].to_numpy(np.int32), [], [], []
+        )
         return pd.DataFrame(
-            {
-                "doc_id": doc,
-                "match_start_ts": [m[0] for m in matches],
-                "match_end_ts": [m[1] for m in matches],
-                "n_steps": [m[2] for m in matches],
-            }
+            [(pdf["doc_id"].iloc[0], *m) for m in matches], columns=MATCH_SCHEMA.fieldNames()
         )
 
-    with_ck = df.withColumn("__ck", _ck_col(F.col("tokens")))
-    return with_ck.groupBy("doc_id").applyInPandas(per_doc, schema=MATCH_SCHEMA)
+    return cep_prestage(df, pattern).groupBy("doc_id").applyInPandas(per_doc, schema=MATCH_SCHEMA)
 
 
 def match_pattern_stream(
@@ -170,10 +200,18 @@ def match_pattern_stream(
     max_buffer_rows: int = 100_000,
     overflow_acc=None,
 ) -> DataFrame:
-    """Streaming NFA: keyed state per doc_id, buffer-until-watermark
+    """Streaming NFA: state per key group, per-doc buffer-until-watermark
     release, event-time timeout flush.
 
-    ``max_buffer_rows`` bounds per-key state: if a key's buffer would
+    Exactness of key groups: a kernel call releases, per doc, the buffered
+    rows at or behind the current watermark, whichever doc of the group
+    triggered the call. applyInPandasWithState with EventTimeTimeout drops
+    input rows behind the watermark of the previous batch before the
+    kernel sees them, and every row released so far is at or behind that
+    watermark, so each doc's released rows still form one (event_ts,
+    checksum)-ordered sequence — the same NFA input as per-doc state.
+
+    ``max_buffer_rows`` bounds per-doc state: if a doc's buffer would
     exceed it (hot key + stalled watermark), the OLDEST overflow rows are
     released through the NFA early, in the same (event_ts, checksum)
     order. For those rows the batching-independence guarantee weakens to
@@ -187,126 +225,110 @@ def match_pattern_stream(
     trips, so the determinism degradation is observable (asserted in
     tests/test_cep.py; surfaced post-run by streaming/jobs + the JSONL
     metrics log as cep_overflow_rows)."""
+    gap_us = pattern.gap_seconds * 1_000_000
 
     def kernel(key, pdf_iter, state):
-        doc_id = key[0]
-        if state.exists:
-            buf_ts, buf_mask, buf_ck, p_state_a, p_start_a, p_last_a = state.get
-            buf_ts = list(buf_ts)
-            buf_mask = list(buf_mask)
-            buf_ck = list(buf_ck)
-            p_state = list(p_state_a)
-            p_start = list(p_start_a)
-            p_last = list(p_last_a)
-        else:
-            buf_ts, buf_mask, buf_ck = [], [], []
-            p_state, p_start, p_last = [], [], []
-
-        timed_out = state.hasTimedOut
-        if not timed_out:
-            for pdf in pdf_iter:
-                if pdf.empty:
-                    continue
-                ts = pdf["event_ts"].astype("datetime64[us]").astype(np.int64).to_numpy()
-                mask = row_step_mask(pdf["tokens"], pattern)
-                buf_ts.extend(ts.tolist())
-                buf_mask.extend(mask.tolist())
-                buf_ck.extend(pdf["__ck"].astype(np.int64).tolist())
-        else:
-            # consume the (empty) iterator per API contract
-            for _ in pdf_iter:
-                pass
-
+        b_doc, b_ts, b_mask, b_ck, p_doc, p_state, p_start, p_last = (
+            state.get if state.exists else ([],) * 8
+        )
+        frames = [pdf for pdf in pdf_iter if not pdf.empty]
+        doc = np.concatenate(
+            [np.asarray(b_doc, dtype=object)] + [f["doc_id"].to_numpy(object) for f in frames]
+        )
+        ts = np.concatenate(
+            [np.asarray(b_ts, dtype=np.int64)] + [_epoch_us(f["event_ts"]) for f in frames]
+        )
+        mask = np.concatenate(
+            [np.asarray(b_mask, dtype=np.int32)] + [f["mask"].to_numpy(np.int32) for f in frames]
+        )
+        ck = np.concatenate(
+            [np.asarray(b_ck, dtype=np.int64)] + [f["ck"].to_numpy(np.int64) for f in frames]
+        )
         wm_us = state.getCurrentWatermarkMs() * 1000
 
-        # strict (event_ts, checksum) release order — the same tie-break the
-        # batch twin sorts by, so same-second rows with different step masks
-        # feed the NFA identically on both paths
-        order = (
-            np.lexsort(
-                (np.asarray(buf_ck, dtype=np.int64), np.asarray(buf_ts, dtype=np.int64))
-            )
-            if buf_ts
-            else np.array([], dtype=np.int64)
-        )
-        sorted_ts = np.asarray(buf_ts, dtype=np.int64)[order] if buf_ts else np.array([], dtype=np.int64)
-        sorted_mask = np.asarray(buf_mask, dtype=np.int32)[order] if buf_ts else np.array([], dtype=np.int32)
-        sorted_ck = np.asarray(buf_ck, dtype=np.int64)[order] if buf_ts else np.array([], dtype=np.int64)
+        # partials per doc, oldest first (the order advance_nfa advances in)
+        partials: dict[str, tuple[list, list, list]] = {}
+        for d, s, a, last in zip(p_doc, p_state, p_start, p_last):
+            part = partials.setdefault(d, ([], [], []))
+            part[0].append(s)
+            part[1].append(a)
+            part[2].append(last)
 
-        if timed_out:
-            release = np.ones(len(sorted_ts), dtype=bool)
-        else:
-            release = sorted_ts <= wm_us
-            n_rem = int((~release).sum())
-            if n_rem > max_buffer_rows:
-                # bounded-state fallback: also release the oldest overflow
-                # (sorted_ts is ascending, so the retained rows are the
-                # newest max_buffer_rows)
-                n_released = int(release.sum())
-                release = np.arange(len(sorted_ts)) < (len(sorted_ts) - max_buffer_rows)
+        # per doc, strict (event_ts, checksum) release order — the same
+        # tie-break the batch twin sorts by
+        codes, docs = pd.factorize(doc)
+        order = np.lexsort((ck, ts, codes))
+        codes, ts, mask, ck = codes[order], ts[order], mask[order], ck[order]
+        starts = np.flatnonzero(np.diff(codes, prepend=-1))
+        ends = np.append(starts[1:], len(codes))
+        keep = np.ones(len(ts), dtype=bool)
+        horizon: dict[str, int] = {}  # per doc: newest buffered ts / p_last
+        matches = []
+        for lo, hi in zip(starts.tolist(), ends.tolist()):
+            d = docs[codes[lo]]
+            n_rel = int(np.searchsorted(ts[lo:hi], wm_us, side="right"))
+            # bounded-state fallback: also release the oldest overflow, so
+            # the retained rows are the newest max_buffer_rows
+            overflow = hi - lo - n_rel - max_buffer_rows
+            if overflow > 0:
+                n_rel += overflow
                 if overflow_acc is not None:
-                    overflow_acc.add(int(release.sum()) - n_released)
-
-        matches = advance_nfa(
-            pattern, sorted_ts[release], sorted_mask[release], p_state, p_start, p_last
-        )
+                    overflow_acc.add(overflow)
+            if n_rel:
+                keep[lo : lo + n_rel] = False
+                part = partials.setdefault(d, ([], [], []))
+                rel = slice(lo, lo + n_rel)
+                matches.extend((d, *m) for m in advance_nfa(pattern, ts[rel], mask[rel], *part))
+            if n_rel < hi - lo:
+                horizon[d] = int(ts[hi - 1])
 
         # prune partials no future row can extend: rows still to come have
         # ts > wm, and extension requires ts - p_last <= gap, so a partial
-        # with wm - p_last > gap is dead. Without this, a timed-out key
-        # with a leftover partial keeps its state and re-registers a wm+1
-        # timeout forever — unbounded state + a timer firing every
-        # watermark advance.
-        _gap_us = pattern.gap_seconds * 1_000_000
-        _live = [j for j in range(len(p_state)) if wm_us - p_last[j] <= _gap_us]
-        if len(_live) != len(p_state):
-            p_state[:] = [p_state[j] for j in _live]
-            p_start[:] = [p_start[j] for j in _live]
-            p_last[:] = [p_last[j] for j in _live]
+        # with wm - p_last > gap is dead. Without this, a group holding a
+        # leftover partial keeps its state and re-registers a wm+1 timeout
+        # forever — unbounded state + a timer firing every watermark advance.
+        p_doc, p_state, p_start, p_last = [], [], [], []
+        for d, (st, sa, sl) in partials.items():
+            for s, a, last in zip(st, sa, sl):
+                if wm_us - last <= gap_us:
+                    p_doc.append(d)
+                    p_state.append(s)
+                    p_start.append(a)
+                    p_last.append(last)
+                    horizon[d] = max(horizon.get(d, last), last)
 
-        rem_ts = sorted_ts[~release]
-        rem_mask = sorted_mask[~release]
-        rem_ck = sorted_ck[~release]
-
-        if timed_out and len(rem_ts) == 0 and not p_state:
+        if not horizon:
             state.remove()
         else:
             state.update(
                 (
-                    rem_ts.tolist(),
-                    rem_mask.tolist(),
-                    rem_ck.tolist(),
-                    list(p_state),
-                    list(p_start),
-                    list(p_last),
+                    docs[codes[keep]].tolist(),
+                    ts[keep].tolist(),
+                    mask[keep].tolist(),
+                    ck[keep].tolist(),
+                    p_doc,
+                    p_state,
+                    p_start,
+                    p_last,
                 )
             )
-            # flush leftovers once the watermark has passed everything buffered
-            # (timeout must not be below the current watermark)
-            horizon_us = max(
-                (int(rem_ts.max()) if len(rem_ts) else 0),
-                (max(p_last) if p_last else 0),
+            # wake up once the watermark has passed the earliest doc's
+            # horizon by the gap (timeout must not be below the watermark)
+            state.setTimeoutTimestamp(
+                max(
+                    min(horizon.values()) // 1000 + pattern.gap_seconds * 1000 + 1,
+                    state.getCurrentWatermarkMs() + 1,
+                )
             )
-            timeout_ms = max(
-                horizon_us // 1000 + pattern.gap_seconds * 1000 + 1,
-                state.getCurrentWatermarkMs() + 1,
-            )
-            state.setTimeoutTimestamp(timeout_ms)
 
         if matches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": doc_id,
-                    "match_start_ts": [m[0] for m in matches],
-                    "match_end_ts": [m[1] for m in matches],
-                    "n_steps": [m[2] for m in matches],
-                }
-            )
+            yield pd.DataFrame(matches, columns=MATCH_SCHEMA.fieldNames())
 
     return (
-        stream.withColumn("__ck", _ck_col(F.col("tokens")))
+        cep_prestage(stream, pattern)
+        .withColumn("key_group", F.pmod(F.xxhash64("doc_id"), F.lit(KEY_GROUPS)))
         .withWatermark("event_ts", watermark)
-        .groupBy("doc_id")
+        .groupBy("key_group")
         .applyInPandasWithState(
             kernel,
             outputStructType=MATCH_SCHEMA,

@@ -291,28 +291,6 @@ class CepPatternProcessor(StatefulProcessor):
         pass
 
 
-def cep_prestage(df: DataFrame, pattern) -> DataFrame:
-    """JVM-side pre-stage for CepPatternProcessor: per row, the NFA step
-    bitmask (bit i set iff tokens ∩ step_i ≠ ∅ — arrays_overlap against
-    the step's literal id set) and the cross-engine release-order checksum.
-    Token arrays die here; the stateful stage sees 3 small numerics."""
-    from parallel_dataflow_spark.streaming.cep import _ck_col, row_step_mask  # noqa: F401
-
-    mask = F.lit(0)
-    for i, step in enumerate(pattern.steps):
-        step_arr = F.array(*[F.lit(int(t)) for t in sorted(step)])
-        mask = mask + F.when(
-            F.arrays_overlap(F.col("tokens").cast("array<bigint>"), step_arr),
-            F.lit(1 << i),
-        ).otherwise(F.lit(0))
-    return df.select(
-        "doc_id",
-        "event_ts",
-        mask.cast("int").alias("mask"),
-        _ck_col(F.col("tokens")).alias("ck"),
-    )
-
-
 def match_pattern_stream_tws(
     stream: DataFrame,
     pattern,
@@ -323,7 +301,7 @@ def match_pattern_stream_tws(
     """transformWithStateInPandas CEP path (needs protobuf — tws_available;
     the apws engine in streaming/cep.py is the in-sandbox fallback with
     identical semantics via the shared advance_nfa kernel)."""
-    from parallel_dataflow_spark.streaming.cep import MATCH_SCHEMA
+    from parallel_dataflow_spark.streaming.cep import MATCH_SCHEMA, cep_prestage
 
     src = cep_prestage(stream, pattern).withWatermark("event_ts", watermark)
     return src.groupBy("doc_id").transformWithStateInPandas(

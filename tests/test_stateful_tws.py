@@ -264,15 +264,15 @@ def _run_mini_tws(rows, pattern, batch_size, wm_lag_us):
 
 
 def _cep_rows(pattern, n=300, seed=11):
-    from parallel_dataflow_spark.streaming.cep import row_step_mask
-
     rng = np.random.default_rng(seed)
     rows = []
     for i in range(n):
         doc = f"doc-{int(rng.integers(0, 3))}"
         toks = rng.integers(0, 8, size=int(rng.integers(1, 5)))
         ts = int(i * US + int(rng.integers(0, 1000)))
-        mask = int(row_step_mask(pd.Series([toks]), pattern)[0])
+        mask = sum(
+            1 << i for i, step in enumerate(pattern.steps) if step.intersection(toks.tolist())
+        )
         rows.append((doc, ts, mask, i))  # ck = i: unique tie-break
     return rows
 
@@ -357,12 +357,10 @@ def test_tws_cep_bounded_state_overflow_counter():
 
 
 def test_cep_prestage_mask_parity(spark):
-    """The JVM-side arrays_overlap bitmask == the python kernel's
-    row_step_mask on the same rows (the two stages must agree for the
-    TWS path to be semantics-identical to apws)."""
+    """The JVM-side arrays_overlap bitmask every CEP path uses == the numpy
+    golden row_step_mask on the same rows."""
     from parallel_dataflow_spark.sources.sequences import SEQUENCE_SCHEMA
-    from parallel_dataflow_spark.streaming.cep import Pattern, row_step_mask
-    from parallel_dataflow_spark.streaming.stateful import cep_prestage
+    from parallel_dataflow_spark.streaming.cep import Pattern, cep_prestage, row_step_mask
 
     pattern = Pattern.of([[1, 2], [3], [4, 5]], gap_seconds=60)
     rng = np.random.default_rng(4)
