@@ -11,9 +11,18 @@ Every Python task starts with ``importlib.invalidate_caches()``, which makes
 each ``zipimporter`` on ``sys.path`` re-read its archive's directory —
 ``pyspark.zip`` once per importer of its subpackages, the Spark jar, this
 zip — although none of them changes while a worker lives.
-``install_zip_dir_cache`` (run when the package is imported, so in every
-worker that has unpickled one of its kernels) makes that re-read
-conditional on the archive's (mtime, size) having changed.
+``install_zip_dir_cache`` (run when the package is imported) makes that
+re-read conditional on the archive's (mtime, size) having changed. It
+reaches a worker by one of two routes:
+
+- sessions built by ``get_spark`` on a local master fork their workers
+  from ``parallel_dataflow_spark.daemon``, which imports the package from
+  this zip on the executors' ``PYTHONPATH``, so every worker inherits the
+  cache whatever kernel it runs;
+- in a session built elsewhere (e.g. one passed to
+  ``__spark_entry__.entry``), only a worker that unpickles one of the
+  package's kernels by reference imports the package; closure kernels
+  pickled by value leave it uncached.
 """
 
 from __future__ import annotations
@@ -31,10 +40,16 @@ _added_to: set[str] = set()
 
 
 def build_pkg_zip() -> str:
-    """Zip parallel_dataflow_spark into a stable temp file (once/process)."""
+    """Zip parallel_dataflow_spark into a stable temp file (once/process).
+    When the package is itself imported from a zip (``--py-files``), return
+    that zip: there is no directory to walk."""
     global _zip_path
     if _zip_path and os.path.exists(_zip_path):
         return _zip_path
+    archive = os.path.dirname(_PKG_DIR)
+    if os.path.isfile(archive):
+        _zip_path = archive
+        return archive
     fd, path = tempfile.mkstemp(prefix="parallel_dataflow_spark_", suffix=".zip")
     os.close(fd)
     with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
@@ -67,7 +82,9 @@ def install_zip_dir_cache() -> None:
     its ``(st_mtime_ns, st_size)`` differs from the last read. An archive
     that cannot be stat'ed (deleted, e.g. the previous SparkContext's
     ``userFiles`` zip still on this process's ``sys.path``) goes to the
-    original method, which drops it. Idempotent."""
+    original method, which drops it. Idempotent. Runs on package import:
+    in the worker daemon of ``get_spark`` sessions (``daemon.py``), and in
+    other sessions' workers when they unpickle a kernel by reference."""
     original = zipimport.zipimporter.invalidate_caches
     if getattr(original, "_reads_on_change", False):
         return

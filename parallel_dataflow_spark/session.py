@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from parallel_dataflow_spark.pkgzip import build_pkg_zip, ensure_on_executors
+
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -77,12 +79,17 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
+    if master.startswith("local"):
+        # fork Python workers from a daemon that has the zip-directory
+        # cache installed (pkgzip); the zip on PYTHONPATH lets it import
+        # the package. Local masters only: remote executors lack the zip.
+        builder = builder.config(
+            "spark.python.daemon.module", "parallel_dataflow_spark.daemon"
+        ).config("spark.executorEnv.PYTHONPATH", build_pkg_zip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    from parallel_dataflow_spark.pkgzip import ensure_on_executors
-
     ensure_on_executors(spark)
     return spark
 

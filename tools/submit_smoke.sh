@@ -5,6 +5,9 @@
 # the same invocation works with --master yarn/k8s on a cluster).
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
+# run outside the checkout: `python -m` puts the cwd on a Python worker
+# daemon's sys.path, which would hide a package missing from the zip
+cd "${TMPDIR:-/tmp}"
 ZIP=$(python -c "import sys; sys.path.insert(0,'$REPO'); from parallel_dataflow_spark.pkgzip import build_pkg_zip; print(build_pkg_zip())" | tail -1)
 echo "engine zip: $ZIP"
 
@@ -14,10 +17,14 @@ spark-submit --master "local[4]" --py-files "$ZIP" \
   dataflow --pass rd --executor seq --input /root/reference/core/gcd.bril \
   2>/dev/null | head -3
 
-echo "--- query (q6) ---"
-spark-submit --master "local[4]" --py-files "$ZIP" \
-  "$REPO/parallel_dataflow_spark/cli.py" \
-  query --name q6_forecast_revenue --sf-dir /root/testdata/sf0.001 \
-  2>/dev/null | head -2
+# q6 runs in the JVM only; dedup_minhash_lsh starts Python workers, whose
+# daemon must import the package from the zip
+for q in q6_forecast_revenue dedup_minhash_lsh; do
+  echo "--- query ($q) ---"
+  spark-submit --master "local[4]" --py-files "$ZIP" \
+    "$REPO/parallel_dataflow_spark/cli.py" \
+    query --name "$q" --sf-dir /root/testdata/sf0.001 \
+    2>/dev/null | head -2
+done
 
 echo "OK"
