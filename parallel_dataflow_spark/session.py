@@ -86,6 +86,20 @@ def get_spark(
         builder = builder.config(
             "spark.python.daemon.module", "parallel_dataflow_spark.daemon"
         ).config("spark.executorEnv.PYTHONPATH", build_pkg_zip())
+        # commit streaming checkpoints (offsets/commits/sources logs, state
+        # stores) through FileSystem.rename. Spark's default FileContext
+        # manager renames via AbstractFileSystem.renameInternal, whose
+        # getFileLinkStatus spawns `readlink` twice per rename on file://
+        # when libhadoop is absent. Both do check-then-rename(2) on a local
+        # disk and write the same layout and .crc sidecars, so checkpoints
+        # resume across them. Local masters only: on HDFS the FileContext
+        # rename is atomic on the server. Sessions built without get_spark
+        # keep Spark's default.
+        builder = builder.config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

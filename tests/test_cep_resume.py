@@ -2,6 +2,7 @@
 from checkpoint, final match set must equal the uninterrupted run (the
 north rule's resumability requirement for stateful operators)."""
 
+import contextlib
 import time
 
 import numpy as np
@@ -58,7 +59,9 @@ def canon(sink, spark):
         return []
 
 
-def test_cep_resume_from_checkpoint(spark, tmp_path):
+def kill_and_resume(spark, tmp_path, first_leg=contextlib.nullcontext()):
+    """Run the CEP job uninterrupted, then again killed mid-stream (inside
+    ``first_leg``) and resumed from its checkpoint; return both match sets."""
     src = str(tmp_path / "src")
     _write_src(spark, src)
 
@@ -72,20 +75,26 @@ def test_cep_resume_from_checkpoint(spark, tmp_path):
     assert want, "fixture produced no matches — pattern too rare"
 
     work = str(tmp_path / "resumed")
-    q2, _ = run_cep_job(
-        spark, src, work, PATTERN, watermark="1 minute", max_files_per_trigger=1
-    )
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream with NFA state in the store
+    with first_leg:
+        q2, _ = run_cep_job(
+            spark, src, work, PATTERN, watermark="1 minute", max_files_per_trigger=1
+        )
+        deadline = time.time() + 120
+        while time.time() < deadline:
+            lp = q2.lastProgress
+            if lp is not None and lp["batchId"] >= 3:
+                break
+            time.sleep(0.2)
+        q2.stop()  # kill mid-stream with NFA state in the store
 
     q3, sink3 = run_cep_job(
         spark, src, work, PATTERN, watermark="1 minute", max_files_per_trigger=1
     )
     q3.processAllAvailable()
     q3.stop()
-    assert canon(sink3, spark) == want
+    return want, canon(sink3, spark)
+
+
+def test_cep_resume_from_checkpoint(spark, tmp_path):
+    want, got = kill_and_resume(spark, tmp_path)
+    assert got == want

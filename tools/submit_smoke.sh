@@ -27,4 +27,15 @@ for q in q6_forecast_revenue dedup_minhash_lsh; do
     2>/dev/null | head -2
 done
 
+# a streaming query commits offsets, commits and state through the
+# checkpoint manager get_spark picks for local masters
+echo "--- stream (tumbling over a 600-row sequence table) ---"
+STREAM="$(mktemp -d "${TMPDIR:-/tmp}/smoke-stream.XXXXXX")"
+trap 'rm -rf "$STREAM"' EXIT
+python -c "import sys; sys.path.insert(0,'$REPO'); from parallel_dataflow_spark.sources import write_sequence_table; write_sequence_table(None, '$STREAM/input', 600, n_files=4)"
+spark-submit --master "local[4]" --py-files "$ZIP" \
+  "$REPO/parallel_dataflow_spark/cli.py" \
+  stream --job tumbling --input "$STREAM/input" --work "$STREAM/work" \
+  2>/dev/null | tail -1
+
 echo "OK"
