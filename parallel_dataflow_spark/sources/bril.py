@@ -22,7 +22,8 @@ so the fixpoint engine runs on the reference's *actual* corpus:
 - ``corpus_frames``: all programs under one or more corpus dirs as the
   engine's (blocks, edges) pandas frames, ``func_id = "<file>::<func>"``,
   with per-function ``fargs`` (ReachingDefs seeds them as defs at block 0,
-  reaching_defs.rs:23-31).
+  reaching_defs.rs:23-31). A missing or empty corpus dir raises
+  ``BrilCorpusNotFound``.
 
 Instruction dicts carry {op, dest, args, value, type}; labels/funcs
 operands are kept out of ``args`` (bril_rs ``Instruction`` separates
@@ -238,10 +239,24 @@ def program_rows(text: str, prog_id: str) -> tuple[list[dict], list[dict]]:
     return block_rows, edge_rows
 
 
+class BrilCorpusNotFound(FileNotFoundError):
+    """A requested corpus subdirectory is missing or holds no ``.bril``
+    program."""
+
+
 def corpus_files(root: str | Path, subdirs: tuple[str, ...]) -> list[Path]:
+    """The ``.bril`` files of each subdirectory, sorted per subdirectory.
+    Raises ``BrilCorpusNotFound`` naming the first subdirectory that is
+    missing or empty, so an absent corpus fails where it is read."""
     out: list[Path] = []
     for sub in subdirs:
-        out.extend(sorted((Path(root) / sub).glob("*.bril")))
+        path = Path(root) / sub
+        files = sorted(path.glob("*.bril"))
+        if not files:
+            raise BrilCorpusNotFound(
+                f"Bril corpus directory {path} is missing or holds no .bril file"
+            )
+        out.extend(files)
     return out
 
 
@@ -250,7 +265,10 @@ def corpus_frames(
     subdirs: tuple[str, ...] = ("core", "rand", "rand_small", "rand_multi_func"),
 ) -> tuple[pd.DataFrame, pd.DataFrame]:
     """The whole corpus as (blocks, edges) pandas frames; prog_id =
-    '<subdir>/<stem>'. Reads the reference snapshot read-only."""
+    '<subdir>/<stem>'. Reads the reference snapshot read-only. Raises
+    ``BrilCorpusNotFound`` (a ``FileNotFoundError``) naming the path when
+    a requested subdirectory is missing or holds no ``.bril`` file; every
+    subdirectory of the full corpus holds programs."""
     blocks, edges = [], []
     for path in corpus_files(root, subdirs):
         prog_id = f"{path.parent.name}/{path.stem}"

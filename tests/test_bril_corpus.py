@@ -19,6 +19,7 @@ from parallel_dataflow_spark.operators.fixpoint import (
 )
 from parallel_dataflow_spark.sources.bril import (
     NON_TERMINATING_CONST_PROP,
+    BrilCorpusNotFound,
     corpus_frames,
     parse_bril_text,
 )
@@ -270,3 +271,22 @@ def test_const_prop_bsp_spark_rand_small_convergent(spark, corpus):
     edges = spark.createDataFrame(fe, schema=EDGES_SCHEMA)
     got = sorted(tuple(r) for r in run_bsp(blocks, edges, SPECS["const_prop"]).collect())
     assert got == golden_rows(fb, fe, SPECS["const_prop"])
+
+
+def test_corpus_frames_missing_dir_names_path(tmp_path):
+    """An absent corpus raises a named error at the loader, naming the
+    directory, instead of columnless frames that fail far from the cause.
+    Needs neither the corpus nor a Spark session."""
+    with pytest.raises(BrilCorpusNotFound) as exc:
+        corpus_frames(tmp_path)
+    assert isinstance(exc.value, FileNotFoundError)
+    assert str(tmp_path / "core") in str(exc.value)
+
+    (tmp_path / "core").mkdir()
+    (tmp_path / "core" / "one.bril").write_text(
+        "@main {\n  v: int = const 1;\n  print v;\n}\n"
+    )
+    with pytest.raises(BrilCorpusNotFound, match="rand_small"):
+        corpus_frames(tmp_path, ("core", "rand_small"))
+    bl, ed = corpus_frames(tmp_path, ("core",))
+    assert list(bl.func_id.unique()) == ["core/one::main"]

@@ -2,13 +2,18 @@
 direct heir of the reference's differential executor test, test.rs:21-70):
 the same query at local[8] and local[32] must produce identical canonical
 rows. The local[32] leg runs in a fresh subprocess (own JVM) so the two
-levels share nothing but the code and the input."""
+levels share nothing but the code and the input; it imports the package
+from the checkout under test. The probe records each query's local[32]
+result on its own, a hash or the error the query raised, so one query
+that fails (e.g. on a missing input) fails only its own test."""
 
 import json
 import subprocess
 import sys
 
 import pytest
+
+from tests.conftest import REPO
 
 QUERIES = [
     "q1_pricing_summary",          # partial/final hash agg
@@ -102,7 +107,7 @@ QUERIES = [
 
 _PROBE = r"""
 import sys, json, hashlib
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])
 from parallel_dataflow_spark.session import get_spark
 from parallel_dataflow_spark.plans.registry import QUERIES, EXTRA_QUERIES
 REG = {**QUERIES, **EXTRA_QUERIES}
@@ -110,7 +115,11 @@ REG = {**QUERIES, **EXTRA_QUERIES}
 spark = get_spark("det32", master="local[32]", shuffle_partitions=32)
 out = {}
 for name in json.loads(sys.argv[1]):
-    rows = sorted(tuple(str(x) for x in r) for r in REG[name](spark, "/root/testdata/sf0.01").collect())
+    try:
+        rows = sorted(tuple(str(x) for x in r) for r in REG[name](spark, "/root/testdata/sf0.01").collect())
+    except Exception as e:
+        out[name] = {"error": f"{type(e).__name__}: {e}"}
+        continue
     out[name] = hashlib.sha256(json.dumps(rows).encode()).hexdigest()
 print("RESULT " + json.dumps(out))
 """
@@ -119,7 +128,7 @@ print("RESULT " + json.dumps(out))
 @pytest.fixture(scope="module")
 def level32_hashes():
     res = subprocess.run(
-        [sys.executable, "-c", _PROBE, json.dumps(QUERIES)],
+        [sys.executable, "-c", _PROBE, json.dumps(QUERIES), REPO],
         capture_output=True,
         text=True,
         timeout=600,
@@ -138,6 +147,9 @@ def test_query_identical_across_levels(spark, level32_hashes, name):
 
     REG = {**_Q, **EXTRA_QUERIES}
 
+    h32 = level32_hashes[name]
+    if isinstance(h32, dict):
+        pytest.fail(f"{name}: local[32] probe raised {h32['error']}")
     rows = sorted(
         tuple(str(x) for x in r)
         for r in REG[name](spark, "/root/testdata/sf0.01").collect()
