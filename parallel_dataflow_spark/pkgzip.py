@@ -27,6 +27,7 @@ reaches a worker by one of two routes:
 
 from __future__ import annotations
 
+import atexit
 import os
 import tempfile
 import zipfile
@@ -40,9 +41,13 @@ _added_to: set[str] = set()
 
 
 def build_pkg_zip() -> str:
-    """Zip parallel_dataflow_spark into a stable temp file (once/process).
-    When the package is itself imported from a zip (``--py-files``), return
-    that zip: there is no directory to walk."""
+    """Zip parallel_dataflow_spark into a stable temp file (once/process),
+    removed when the process exits: the path is valid only while the
+    calling process is alive, so a caller that hands it to another process
+    outliving this one (e.g. ``spark-submit --py-files``) must copy it
+    first. When the package is itself imported from a zip
+    (``--py-files``), return that zip: there is no directory to walk, and
+    it is not ours to remove."""
     global _zip_path
     if _zip_path and os.path.exists(_zip_path):
         return _zip_path
@@ -52,6 +57,7 @@ def build_pkg_zip() -> str:
         return archive
     fd, path = tempfile.mkstemp(prefix="parallel_dataflow_spark_", suffix=".zip")
     os.close(fd)
+    atexit.register(_remove, path)
     with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
         for root, _dirs, files in os.walk(_PKG_DIR):
             if "__pycache__" in root:
@@ -66,6 +72,13 @@ def build_pkg_zip() -> str:
                 zf.write(full, rel)
     _zip_path = path
     return path
+
+
+def _remove(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
 
 
 def ensure_on_executors(spark: SparkSession) -> None:

@@ -2185,7 +2185,8 @@ def cep_token_pattern_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pdf = _cep_input_pdf(with_sentinel=True).sort_values("event_ts")
     base = tempfile.mkdtemp(prefix="cep_stream_entry_")
     src = os.path.join(base, "src")
-    for i, part in enumerate(np.array_split(pdf, 8)):
+    chunks = np.array_split(np.arange(len(pdf)), 8)
+    for i, part in enumerate(pdf.iloc[idx] for idx in chunks):
         spark.createDataFrame(part, schema=SEQUENCE_SCHEMA).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(src, f"chunk={i:04d}"))

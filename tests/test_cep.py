@@ -137,7 +137,7 @@ def test_stream_matcher_equals_batch(spark, cep_df, tmp_path):
     pdf["event_ts"] = pdf["event_ts"].astype("datetime64[us]")
     # write in 4 files split by time so matches span micro-batches
     pdf = pdf.sort_values("event_ts")
-    for i, part in enumerate(np.array_split(pdf, 4)):
+    for i, part in enumerate(pdf.iloc[idx] for idx in np.array_split(np.arange(len(pdf)), 4)):
         spark.createDataFrame(part, schema=SEQUENCE_SCHEMA).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(src, f"chunk={i:04d}"))
@@ -194,7 +194,7 @@ def test_stream_matcher_bounded_buffer(spark, cep_df, tmp_path):
     pdf = pd.DataFrame(_rows())
     pdf["event_ts"] = pdf["event_ts"].astype("datetime64[us]")
     pdf = pdf.sort_values("event_ts")
-    for i, part in enumerate(np.array_split(pdf, 4)):
+    for i, part in enumerate(pdf.iloc[idx] for idx in np.array_split(np.arange(len(pdf)), 4)):
         spark.createDataFrame(part, schema=SEQUENCE_SCHEMA).coalesce(1).write.mode(
             "overwrite"
         ).parquet(os.path.join(src, f"chunk={i:04d}"))

@@ -46,7 +46,7 @@ def _write_src(spark, d):
     import os
 
     os.makedirs(d)
-    for i, part in enumerate(np.array_split(pdf, 8)):
+    for i, part in enumerate(pdf.iloc[idx] for idx in np.array_split(np.arange(len(pdf)), 8)):
         spark.createDataFrame(part, schema=SEQUENCE_SCHEMA).coalesce(1).write.mode(
             "overwrite"
         ).parquet(f"{d}/chunk={i:04d}")

@@ -121,6 +121,29 @@ def test_build_pkg_zip_reuses_the_zip_it_was_imported_from(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     assert out.stdout.split() == [zip_path, "True"]
+    assert os.path.isfile(zip_path)  # not removed by the process that reused it
+
+
+def test_built_zip_is_removed_at_exit(tmp_path):
+    """The zip build_pkg_zip writes to the temp dir goes when its process
+    exits, so sessions leave no zip behind."""
+    script = textwrap.dedent(
+        """
+        import os
+        from parallel_dataflow_spark import pkgzip
+        path = pkgzip.build_pkg_zip()
+        print(path, os.path.isfile(path))
+        """
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=REPO)
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    path, built = out.stdout.split()
+    assert os.path.dirname(path) == str(tmp_path) and built == "True"
+    assert list(tmp_path.glob("parallel_dataflow_spark_*.zip")) == []
 
 
 def test_session_round_trip_with_deleted_userfiles_zip(tmp_path):

@@ -8,7 +8,12 @@ REPO="$(cd "$(dirname "$0")/.." && pwd)"
 # run outside the checkout: `python -m` puts the cwd on a Python worker
 # daemon's sys.path, which would hide a package missing from the zip
 cd "${TMPDIR:-/tmp}"
-ZIP=$(python -c "import sys; sys.path.insert(0,'$REPO'); from parallel_dataflow_spark.pkgzip import build_pkg_zip; print(build_pkg_zip())" | tail -1)
+WORK="$(mktemp -d "${TMPDIR:-/tmp}/smoke.XXXXXX")"
+trap 'rm -rf "$WORK"' EXIT
+# build_pkg_zip's file is removed when the process that built it exits:
+# copy it out in the same interpreter
+ZIP="$WORK/engine.zip"
+python -c "import shutil, sys; sys.path.insert(0,'$REPO'); from parallel_dataflow_spark.pkgzip import build_pkg_zip; shutil.copy(build_pkg_zip(), '$ZIP')"
 echo "engine zip: $ZIP"
 
 echo "--- dataflow (reaching defs over the reference's gcd.bril) ---"
@@ -30,8 +35,7 @@ done
 # a streaming query commits offsets, commits and state through the
 # checkpoint manager get_spark picks for local masters
 echo "--- stream (tumbling over a 600-row sequence table) ---"
-STREAM="$(mktemp -d "${TMPDIR:-/tmp}/smoke-stream.XXXXXX")"
-trap 'rm -rf "$STREAM"' EXIT
+STREAM="$WORK/stream"
 python -c "import sys; sys.path.insert(0,'$REPO'); from parallel_dataflow_spark.sources import write_sequence_table; write_sequence_table(None, '$STREAM/input', 600, n_files=4)"
 spark-submit --master "local[4]" --py-files "$ZIP" \
   "$REPO/parallel_dataflow_spark/cli.py" \
