@@ -95,6 +95,8 @@ def _load_input(spark, input_spec: str):
 
 
 def main(argv: list[str] | None = None) -> int:
+    from parallel_dataflow_spark.streaming.jobs import JOBS
+
     p = argparse.ArgumentParser(prog="parallel_dataflow_spark")
     p.add_argument("--master", default=None)
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -121,16 +123,7 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--limit", type=int, default=20)
 
     s = sub.add_parser("stream", help="run a streaming job to completion")
-    s.add_argument(
-        "--job",
-        choices=[
-            "tumbling", "sliding", "session", "throughput", "dedup", "join",
-            "pipeline", "neardup", "drift", "mix", "quota", "spandedup", "dsirgate",
-            "hll", "cms", "bloomgate", "kmv", "hhtrack", "histq", "outerjoin",
-            "matview", "enrich",
-        ],
-        default="tumbling",
-    )
+    s.add_argument("--job", choices=list(JOBS), default="tumbling")
     s.add_argument("--input", required=True)
     s.add_argument("--work", required=True)
 
@@ -189,33 +182,7 @@ def main(argv: list[str] | None = None) -> int:
         for r in df.limit(args.limit).collect():
             print(json.dumps([str(x) for x in r]))
     else:
-        from parallel_dataflow_spark.streaming import jobs as J
-
-        runner = {
-            "tumbling": J.run_tumbling_job,
-            "sliding": J.run_sliding_job,
-            "session": J.run_session_job,
-            "throughput": J.run_throughput_job,
-            "dedup": J.run_dedup_job,
-            "join": J.run_join_job,
-            "pipeline": J.run_pipeline_job,
-            "neardup": J.run_neardup_job,
-            "drift": J.run_drift_job,
-            "mix": J.run_mix_job,
-            "quota": J.run_quota_job,
-            "spandedup": J.run_spandedup_job,
-            "dsirgate": J.run_dsir_gate_job,
-            "hll": J.run_hll_job,
-            "cms": J.run_cms_job,
-            "bloomgate": J.run_bloom_gate_job,
-            "kmv": J.run_kmv_job,
-            "hhtrack": J.run_hh_job,
-            "histq": J.run_histq_job,
-            "outerjoin": J.run_outer_join_job,
-            "matview": J.run_matview_job,
-            "enrich": J.run_enrich_job,
-        }[args.job]
-        query, *sinks = runner(spark, args.input, args.work)
+        query, *sinks = JOBS[args.job](spark, args.input, args.work)
         query.processAllAvailable()
         query.stop()
         # report the user-facing sink (jobs with a derived view return it last)

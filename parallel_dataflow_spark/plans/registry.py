@@ -1525,8 +1525,7 @@ _RUNNING_STATS_ORACLE = """
 @register("running_doc_stats", _RUNNING_STATS_ORACLE)
 def running_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the custom keyed stateful accumulator
-    (streaming/stateful.py — transformWithStateInPandas with
-    applyInPandasWithState fallback): per-doc count / Σ tokens /
+    (streaming/stateful.py, applyInPandasWithState): per-doc count / Σ tokens /
     running checksum (Σ token ids mod 2^40) over hash-tokenized documents.
     The cross-engine md5 tokenizer makes the checksum oracle-replayable;
     stream==batch is differential-tested in tests/test_streaming.py."""
@@ -3571,8 +3570,8 @@ def pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Windowed quota admission (batch face of the TokenQuotaProcessor /
-# token_quota_stream stateful pair — streaming/stateful.py): greedy
+# Windowed quota admission (batch face of the token_quota_stream
+# stateful operator — streaming/stateful.py): greedy
 # prefix under a cumulative cap per (source, event-time window)
 # ---------------------------------------------------------------------------
 
@@ -3616,9 +3615,8 @@ def quota_admission_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     table: sequences (here: events weighted by a deterministic token
     count derived from value) are admitted in strict (ts, hash(event_id))
     order while the window's cumulative raw total stays within the
-    budget — the batch twin of the streaming TokenQuotaProcessor
-    (MapState TWS) / token_quota_stream (apws fallback), sharing
-    token_quota_batch verbatim. One window cumsum + one aggregation;
+    budget — the batch twin of the streaming token_quota_stream,
+    sharing token_quota_batch verbatim. One window cumsum + one aggregation;
     at 100 TB this is a single exchange keyed (source, window)."""
     from parallel_dataflow_spark.streaming.stateful import token_quota_batch
 

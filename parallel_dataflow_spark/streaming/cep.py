@@ -2,9 +2,9 @@
 
 Pattern model: an ordered list of steps; each step is a set of token ids.
 A row (one sequence arrival) satisfies a step if its token array contains
-any of the step's tokens (``arrays_overlap`` in the JVM pre-stage,
-``cep_prestage``). A match is rows r1 < r2 < ... < rk in event-time
-order, one per step, consecutive rows within ``gap_seconds``.
+any of the step's tokens (tested in the JVM pre-stage, ``cep_prestage``).
+A match is rows r1 < r2 < ... < rk in event-time order, one per step,
+consecutive rows within ``gap_seconds``.
 Skip-till-next-match semantics; overlapping starts allowed up to
 ``max_partials`` per doc.
 
@@ -88,20 +88,18 @@ def _ck_col(tokens) -> F.Column:
 
 
 def cep_prestage(df: DataFrame, pattern: Pattern) -> DataFrame:
-    """JVM-side pre-stage of every CEP path (stream, TWS, batch twin): per
-    row, the NFA step bitmask (bit i set iff tokens ∩ step_i ≠ ∅ —
-    arrays_overlap against the step's literal id set) and the cross-engine
-    release-order checksum. Token arrays die here, before any exchange;
-    the stateful stage sees 3 small numerics. Each step's id set is one SQL
-    array literal (one py4j call, not one per id)."""
-    mask = F.lit(0)
+    """JVM-side pre-stage of both CEP paths (stream and batch twin): per
+    row, the NFA step bitmask (bit i set iff some token is in step_i) and
+    the cross-engine release-order checksum. Token arrays die here, before
+    any exchange; the stateful stage sees 3 small numerics. The mask is
+    one SQL expression (one py4j call, not one per id); each step tests
+    ``exists(tokens, t -> t IN (<ids>))``, whose literal IN list Catalyst
+    turns into one hash set, so no per-row set is built."""
+    tests = []
     for i, step in enumerate(pattern.steps):
-        ids = ", ".join(str(int(t)) for t in sorted(step))
-        step_arr = F.expr(f"array({ids})").cast("array<bigint>")
-        mask = mask + F.when(
-            F.arrays_overlap(F.col("tokens").cast("array<bigint>"), step_arr),
-            F.lit(1 << i),
-        ).otherwise(F.lit(0))
+        ids = ", ".join(str(int(t)) for t in sorted(step)) or "NULL"  # empty: no hit
+        tests.append(f"IF(exists(tokens, t -> CAST(t AS BIGINT) IN ({ids})), {1 << i}, 0)")
+    mask = F.expr(" + ".join(tests) or "0")
     return df.select(
         "doc_id",
         "event_ts",

@@ -15,8 +15,7 @@ REAL and tested while the engine-specific dependency is gated:
   idempotent-foreachBatch pattern, expressed transactionally;
 - the MERGE/DDL text generation is pure and unit-tested here; the
   end-to-end test auto-skips without the jars and runs on a real cluster
-  image (mirror of the transformWithStateInPandas gating,
-  tests/test_stateful_tws.py).
+  image.
 
 Exactly-once argument (same as the reference's idempotent keyed result
 sink, impls/src/passes.rs:109-120): Spark Structured Streaming replays a

@@ -13,7 +13,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from parallel_dataflow_spark.sources.sequences import read_sequence_stream
+from parallel_dataflow_spark.sources.sequences import (
+    read_sequence_stream,
+    read_sequence_table,
+)
 from parallel_dataflow_spark.streaming import windows as W
 from parallel_dataflow_spark.streaming.cep import Pattern, match_pattern_stream
 from parallel_dataflow_spark.streaming.sink import IdempotentKeyedSink
@@ -41,6 +44,20 @@ def make_sink(
     return IdempotentKeyedSink(os.path.join(work_dir, "sink"), key_cols=key_cols)
 
 
+def _start(
+    df: DataFrame, output_mode: str, work_dir: str, write_batch
+) -> StreamingQuery:
+    """Start ``df`` into ``write_batch`` through foreachBatch, checkpointed
+    at ``<work_dir>/checkpoint`` — the one place a deployable's checkpoint
+    layout is decided."""
+    return (
+        df.writeStream.outputMode(output_mode)
+        .foreachBatch(write_batch)
+        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
+        .start()
+    )
+
+
 def run_tumbling_job(
     spark: SparkSession,
     input_dir: str,
@@ -60,13 +77,7 @@ def run_tumbling_job(
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     stream = W.salted_repartition(stream, "doc_id", salt_buckets)
     agg = W.tumbling_doc_stats(stream, window=window, watermark=watermark)
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
 def run_sliding_job(
@@ -90,13 +101,7 @@ def run_sliding_job(
     agg = W.sliding_source_stats(
         stream, window=window, slide=slide, watermark=watermark
     )
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
 def run_session_job(
@@ -114,13 +119,7 @@ def run_session_job(
     )
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     agg = W.session_doc_stats(stream, gap=gap, watermark=watermark)
-    q = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(agg, "append", work_dir, sink.foreach_batch()), sink
 
 
 def run_cep_job(
@@ -145,13 +144,7 @@ def run_cep_job(
         max_buffer_rows=max_buffer_rows,
         overflow_acc=overflow_acc,
     )
-    q = (
-        matches.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(matches, "append", work_dir, sink.foreach_batch()), sink
 
 
 def run_join_job(
@@ -190,13 +183,7 @@ def run_join_job(
     joined = W.stream_stream_token_join(
         left, right, watermark=watermark, max_delay=max_delay, include_checksums=True
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(joined, "append", work_dir, sink.foreach_batch()), sink
 
 
 def run_dedup_job(
@@ -223,8 +210,6 @@ def run_dedup_job(
     dedup exchange — the stateful shuffle carries only
     (doc_id, fingerprint, n_tok, source, event_ts), ~30 bytes/row instead
     of the ~2 KB token arrays."""
-    from pyspark.sql import functions as F
-
     sink = make_sink(spark, work_dir, ["doc_id", "fingerprint"], iceberg_table)
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     deduped = (
@@ -233,13 +218,7 @@ def run_dedup_job(
         .withWatermark("event_ts", watermark)
         .dropDuplicatesWithinWatermark(["doc_id", "fingerprint"])
     )
-    q = (
-        deduped.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(deduped, "append", work_dir, sink.foreach_batch()), sink
 
 
 def run_throughput_job(
@@ -259,8 +238,6 @@ def run_throughput_job(
     cores, while the window agg exercises shuffle + state."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import functions as F
-
     def featurize(batches):
         # Representative token-array work per sequence: top-token via
         # bincount + order-sensitive positional checksum. Arrow-batched
@@ -338,13 +315,7 @@ def run_throughput_job(
             "max_top",
         )
     )
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
 def run_pipeline_job(
@@ -387,8 +358,6 @@ def run_pipeline_job(
     NOT advance event time — a probe row meant to drain the window tail
     must PASS the gate (tests use a far-future sentinel with an
     identifiable source)."""
-    from pyspark.sql import functions as F
-
     sink = make_sink(spark, work_dir, ["source", "window_start"], iceberg_table)
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     gated = (
@@ -411,13 +380,7 @@ def run_pipeline_job(
             "tokens_admitted",
         )
     )
-    q = (
-        agg.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(agg, "append", work_dir, sink.foreach_batch()), sink
 
 
 def run_neardup_job(
@@ -451,13 +414,7 @@ def run_neardup_job(
     def write_batch(df: DataFrame, batch_id: int) -> None:
         inner(fold_verdicts(df, threshold), batch_id)
 
-    q = (
-        verdicts.writeStream.outputMode("append")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(verdicts, "append", work_dir, write_batch), sink
 
 
 def batch_pipeline_golden(
@@ -468,10 +425,6 @@ def batch_pipeline_golden(
     max_tok: int = 480,
 ) -> DataFrame:
     """Batch twin of run_pipeline_job (gate → distinct → window agg)."""
-    from pyspark.sql import functions as F
-
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     d = (
         read_sequence_table(spark, input_dir)
         .withColumn("fingerprint", F.xxhash64("doc_id", "tokens"))
@@ -497,8 +450,6 @@ def batch_pipeline_golden(
 def batch_tumbling_golden(spark: SparkSession, input_dir: str, window: str = "10 minutes") -> DataFrame:
     """Batch twin of run_tumbling_job's aggregation (the differential
     golden; withWatermark is a no-op on batch DataFrames)."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     return W.tumbling_doc_stats(read_sequence_table(spark, input_dir), window=window)
 
 
@@ -532,6 +483,25 @@ def _bucket_hist_kernel(n_buckets: int):
     return kernel
 
 
+def _drift_hist(
+    df: DataFrame, n_buckets: int, window: str, watermark: str | None
+) -> DataFrame:
+    """Shared stream/batch drift plan: map-side bucket histograms, then
+    per-(window, source, pos) sums."""
+    feat = df.mapInPandas(
+        _bucket_hist_kernel(n_buckets),
+        schema="source string, event_ts timestamp, hist array<bigint>",
+    )
+    if watermark is not None:
+        feat = feat.withWatermark("event_ts", watermark)
+    return (
+        feat.select("source", "event_ts", F.posexplode("hist").alias("pos", "cnt"))
+        .groupBy(F.window("event_ts", window).alias("w"), "source", "pos")
+        .agg(F.sum("cnt").cast("long").alias("cnt"))
+        .select("source", F.col("w.start").alias("window_start"), "pos", "cnt")
+    )
+
+
 def run_drift_job(
     spark: SparkSession,
     input_dir: str,
@@ -554,35 +524,12 @@ def run_drift_job(
     bounded by windows x sources x n_buckets regardless of corpus size —
     and the group-key space is naturally spread (no salting needed: every
     source fans out over n_buckets keys)."""
-    from pyspark.sql import functions as F
-
     sink = make_sink(
         spark, work_dir, ["source", "window_start", "pos"], iceberg_table
     )
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    feat = stream.mapInPandas(
-        _bucket_hist_kernel(n_buckets),
-        schema="source string, event_ts timestamp, hist array<bigint>",
-    )
-    agg = (
-        feat.withWatermark("event_ts", watermark)
-        .select("source", "event_ts", F.posexplode("hist").alias("pos", "cnt"))
-        .groupBy(F.window("event_ts", window).alias("w"), "source", "pos")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .select(
-            "source",
-            F.col("w.start").alias("window_start"),
-            "pos",
-            "cnt",
-        )
-    )
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    agg = _drift_hist(stream, n_buckets, window, watermark)
+    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
 def batch_drift_golden(
@@ -593,21 +540,7 @@ def batch_drift_golden(
 ) -> DataFrame:
     """Batch twin of run_drift_job's histogram table (the differential
     golden for the stream-vs-batch test)."""
-    from pyspark.sql import functions as F
-
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
-    d = read_sequence_table(spark, input_dir)
-    feat = d.mapInPandas(
-        _bucket_hist_kernel(n_buckets),
-        schema="source string, event_ts timestamp, hist array<bigint>",
-    )
-    return (
-        feat.select("source", "event_ts", F.posexplode("hist").alias("pos", "cnt"))
-        .groupBy(F.window("event_ts", window).alias("w"), "source", "pos")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .select("source", F.col("w.start").alias("window_start"), "pos", "cnt")
-    )
+    return _drift_hist(read_sequence_table(spark, input_dir), n_buckets, window, None)
 
 
 def drift_report(hist: DataFrame) -> DataFrame:
@@ -618,8 +551,6 @@ def drift_report(hist: DataFrame) -> DataFrame:
     join here is small; the dense JS sum (p = 0 for buckets a source
     never hit) mirrors the batch entry's oracle formulation. 6-dp
     rounding as everywhere in the cross-engine contract."""
-    from pyspark.sql import functions as F
-
     g = hist.groupBy("window_start", "pos").agg(F.sum("cnt").alias("gcnt"))
     gt = g.groupBy("window_start").agg(F.sum("gcnt").alias("gt"))
     st = hist.groupBy("source", "window_start").agg(
@@ -673,10 +604,6 @@ def calibrate_mix_rates(
     at-least-once redelivery) over tighter per-run share variance. Hash a
     per-row key (e.g. doc_id || event_ts) instead only when per-document
     consistency is explicitly not required."""
-    from pyspark.sql import functions as F
-
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     totals = (
         read_sequence_table(spark, input_dir)
         .groupBy("source")
@@ -699,21 +626,36 @@ def calibrate_mix_rates(
     ]
 
 
-def _mix_kept(stream, rates: list[tuple[str, int]]):
+def _mix_volume(
+    df: DataFrame, rates: list[tuple[str, int]], window: str, watermark: str | None
+) -> DataFrame:
     """Shared stream/batch mix plan: broadcast threshold join + seedless
-    hash acceptance, token arrays projected away BEFORE any exchange."""
-    from pyspark.sql import functions as F
-
+    hash acceptance (token arrays projected away BEFORE any exchange),
+    then the per-(window, source) kept volume."""
     from parallel_dataflow_spark.functions.text import md5_60bit
 
-    spark = stream.sparkSession
-    rdf = spark.createDataFrame(rates, "source string, thresh long")
+    rdf = df.sparkSession.createDataFrame(rates, "source string, thresh long")
     u = F.pmod(md5_60bit(F.col("doc_id")), F.lit(1_000_000))
-    return (
-        stream.select("doc_id", "source", "n_tok", "event_ts")
+    kept = (
+        df.select("doc_id", "source", "n_tok", "event_ts")
         .withColumn("u", u)
         .join(F.broadcast(rdf), "source")
         .filter(F.col("u") < F.col("thresh"))
+    )
+    if watermark is not None:
+        kept = kept.withWatermark("event_ts", watermark)
+    return (
+        kept.groupBy(F.window("event_ts", window).alias("w"), "source")
+        .agg(
+            F.count("*").cast("long").alias("docs_kept"),
+            F.sum("n_tok").cast("long").alias("tokens_kept"),
+        )
+        .select(
+            "source",
+            F.col("w.start").alias("window_start"),
+            "docs_kept",
+            "tokens_kept",
+        )
     )
 
 
@@ -740,34 +682,12 @@ def run_mix_job(
     shuffle carries one (source, window) partial per map task. The kept
     stream itself (not aggregated here) would flow to downstream sinks
     at the same cost as the input scan."""
-    from pyspark.sql import functions as F
-
     if rates is None:
         rates = calibrate_mix_rates(spark, input_dir)
     sink = make_sink(spark, work_dir, ["source", "window_start"], iceberg_table)
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    agg = (
-        _mix_kept(stream, rates)
-        .withWatermark("event_ts", watermark)
-        .groupBy(F.window("event_ts", window).alias("w"), "source")
-        .agg(
-            F.count("*").cast("long").alias("docs_kept"),
-            F.sum("n_tok").cast("long").alias("tokens_kept"),
-        )
-        .select(
-            "source",
-            F.col("w.start").alias("window_start"),
-            "docs_kept",
-            "tokens_kept",
-        )
-    )
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    agg = _mix_volume(stream, rates, window, watermark)
+    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
 def batch_mix_golden(
@@ -778,24 +698,7 @@ def batch_mix_golden(
 ) -> DataFrame:
     """Batch twin of run_mix_job's kept-volume table (the stream-vs-batch
     differential golden)."""
-    from pyspark.sql import functions as F
-
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
-    return (
-        _mix_kept(read_sequence_table(spark, input_dir), rates)
-        .groupBy(F.window("event_ts", window).alias("w"), "source")
-        .agg(
-            F.count("*").cast("long").alias("docs_kept"),
-            F.sum("n_tok").cast("long").alias("tokens_kept"),
-        )
-        .select(
-            "source",
-            F.col("w.start").alias("window_start"),
-            "docs_kept",
-            "tokens_kept",
-        )
-    )
+    return _mix_volume(read_sequence_table(spark, input_dir), rates, window, None)
 
 
 def run_quota_job(
@@ -810,7 +713,7 @@ def run_quota_job(
     iceberg_table: str | None = None,
 ):
     """Streaming windowed quota enforcement — the deployable face of
-    TokenQuotaProcessor / token_quota_stream (streaming/stateful.py) and
+    token_quota_stream (streaming/stateful.py) and
     the 13th deployable: sequences are admitted per (source, event-time
     window) while the window's cumulative raw token total stays within
     ``budget``, and the RUNNING per-window admitted/rejected totals are
@@ -827,16 +730,8 @@ def run_quota_job(
 
     sink = make_sink(spark, work_dir, ["source", "window_start"], iceberg_table)
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    out = token_quota_stream(
-        stream, budget, window_sec, ttl_sec, watermark, api="auto"
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    out = token_quota_stream(stream, budget, window_sec, ttl_sec, watermark)
+    return _start(out, "append", work_dir, sink.foreach_batch()), sink
 
 
 def run_spandedup_job(
@@ -851,8 +746,8 @@ def run_spandedup_job(
 ) -> tuple[StreamingQuery, IdempotentKeyedSink]:
     """Streaming C4-style keep-first span dedup — the 14th deployable:
     non-overlapping ``span_tokens``-token spans are hashed map-side, and
-    per span hash the buffered-release processor
-    (streaming/spandedup.SpanDedupProcessor, apws fallback) assigns a
+    per span hash the buffered-release state kernel
+    (streaming/spandedup.span_dedup_stream) assigns a
     batching-invariant owner (first in global (event_ts, ck) order within
     the watermark+ttl horizon) and running duplicate counts, published to
     an exactly-once sink keyed by the span hash (latest-wins = final).
@@ -868,16 +763,8 @@ def run_spandedup_job(
 
     sink = make_sink(spark, work_dir, ["h"], iceberg_table)
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    out = span_dedup_stream(
-        stream, span_tokens, ttl_sec, watermark, api="auto"
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    out = span_dedup_stream(stream, span_tokens, ttl_sec, watermark)
+    return _start(out, "append", work_dir, sink.foreach_batch()), sink
 
 
 def calibrate_dsir_lr(
@@ -893,10 +780,6 @@ def calibrate_dsir_lr(
     arithmetic everywhere after). Returns a dense ``buckets``-long list —
     small enough to bake into the streaming plan as a literal."""
     import math
-
-    from pyspark.sql import functions as F
-
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
 
     df = read_sequence_table(spark, input_dir)
     b_ct = int(buckets)
@@ -928,8 +811,6 @@ def _dsir_weight(lr_micro: list[int], buckets: int):
     micro-nat model is an array LITERAL in the plan (the broadcast-
     centroid trick applied to a language model), so scoring every token
     of every sequence costs zero exchanges and zero Python."""
-    from pyspark.sql import functions as F
-
     lr_arr = F.array(*[F.lit(int(v)) for v in lr_micro])
     return F.aggregate(
         F.transform(
@@ -943,8 +824,6 @@ def _dsir_weight(lr_micro: list[int], buckets: int):
 
 def _dsir_admission(df: DataFrame, lr_micro: list[int], buckets: int,
                     window: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     adm = (_dsir_weight(lr_micro, buckets) > 0).alias("admitted")
     return (
         df.withColumn("admitted", adm)
@@ -1006,13 +885,7 @@ def run_dsir_gate_job(
     agg = _dsir_admission(
         stream.withWatermark("event_ts", watermark), lr_micro, buckets, window
     )
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
 def batch_dsir_gate_golden(
@@ -1023,8 +896,6 @@ def batch_dsir_gate_golden(
     window: str = "10 minutes",
 ) -> DataFrame:
     """Batch twin of run_dsir_gate_job's admission table."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     return _dsir_admission(
         read_sequence_table(spark, input_dir), lr_micro, buckets, window
     )
@@ -1081,13 +952,7 @@ def run_hll_job(
     sink = make_sink(spark, work_dir, ["window_start", "bucket"], iceberg_table)
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     regs = _hll_window_registers(stream, window, watermark)
-    q = (
-        regs.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(regs, "update", work_dir, sink.foreach_batch()), sink
 
 
 def hll_report(registers: DataFrame) -> DataFrame:
@@ -1105,8 +970,6 @@ def batch_hll_golden(
     spark: SparkSession, input_dir: str, window: str = "10 minutes"
 ) -> DataFrame:
     """Batch twin of run_hll_job's register table."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     return _hll_window_registers(read_sequence_table(spark, input_dir), window, None)
 
 
@@ -1167,13 +1030,7 @@ def run_cms_job(
     sink = make_sink(spark, work_dir, ["window_start", "cell"], iceberg_table)
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     cells = _cms_window_cells(stream, window, watermark)
-    q = (
-        cells.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(cells, "update", work_dir, sink.foreach_batch()), sink
 
 
 def cms_report(cells: DataFrame, probe_tokens: list[int]) -> DataFrame:
@@ -1215,8 +1072,6 @@ def batch_cms_golden(
     spark: SparkSession, input_dir: str, window: str = "10 minutes"
 ) -> DataFrame:
     """Batch twin of run_cms_job's cell table."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     return _cms_window_cells(read_sequence_table(spark, input_dir), window, None)
 
 
@@ -1283,8 +1138,6 @@ def calibrate_bloom_filter(
     streaming plan as a literal, no matter how many distinct n-grams the
     benchmark holds (the property a broadcast n-gram SET does not have)."""
     from parallel_dataflow_spark.operators.sketches import bloom_build, bloom_collect
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     bench = read_sequence_table(spark, input_dir).filter(
         F.col("source") == bench_source
     )
@@ -1371,13 +1224,7 @@ def run_bloom_gate_job(
     agg = _bloom_admission(
         stream.withWatermark("event_ts", watermark), bloom_words, window
     )
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
 def batch_bloom_gate_golden(
@@ -1387,8 +1234,6 @@ def batch_bloom_gate_golden(
     window: str = "10 minutes",
 ) -> DataFrame:
     """Batch twin of run_bloom_gate_job's contamination table."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     return _bloom_admission(read_sequence_table(spark, input_dir), bloom_words, window)
 
 
@@ -1400,14 +1245,13 @@ def run_kmv_job(
     ttl_sec: int = 600,
     watermark: str = "5 minutes",
     max_files_per_trigger: int = 2,
-    api: str = "auto",
     iceberg_table: str | None = None,
 ) -> tuple[StreamingQuery, IdempotentKeyedSink]:
     """Streaming KMV bottom-k vocabulary sketch — the 19th deployable and
     the online face of the batch ``corpus_overlap_kmv`` entry: every
     (source, event-time window) keeps the K smallest distinct token
-    hashes as keyed state (streaming/kmvstream.KmvProcessor, apws
-    fallback), and the running sketch rows flow to an exactly-once sink
+    hashes as keyed state (streaming/kmvstream.kmv_stream), and the
+    running sketch rows flow to an exactly-once sink
     keyed (source, window_start). Per-window source cardinalities and
     ALL pairwise source vocabulary overlaps are then constant-time reads
     of the sink (kmv_window_report) — the stream never re-runs.
@@ -1423,21 +1267,14 @@ def run_kmv_job(
 
     sink = make_sink(spark, work_dir, ["source", "window_start"], iceberg_table)
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    out = kmv_stream(stream, window_sec, ttl_sec, watermark, api=api)
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    out = kmv_stream(stream, window_sec, ttl_sec, watermark)
+    return _start(out, "append", work_dir, sink.foreach_batch()), sink
 
 
 def batch_kmv_golden(
     spark: SparkSession, input_dir: str, window_sec: int = 600
 ) -> DataFrame:
     """Batch twin of run_kmv_job's sketch table."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
     from parallel_dataflow_spark.streaming.kmvstream import kmv_window_batch
 
     return kmv_window_batch(read_sequence_table(spark, input_dir), window_sec)
@@ -1476,8 +1313,6 @@ def calibrate_hh_candidates(
     exact, deterministic, and bounded — the calibrate-offline /
     enforce-online split of run_mix_job applied to frequency."""
     from parallel_dataflow_spark.operators.heavy_hitters import heavy_hitters_exact
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     items = read_sequence_table(spark, input_dir).select(
         _token_bigrams().alias("bg")
     )
@@ -1551,13 +1386,7 @@ def run_hh_job(
     sink = make_sink(spark, work_dir, ["window_start", "key"], iceberg_table)
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     agg = _hh_admission(stream, candidates, window, watermark)
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
 def batch_hh_golden(
@@ -1567,8 +1396,6 @@ def batch_hh_golden(
     window: str = "10 minutes",
 ) -> DataFrame:
     """Batch twin of run_hh_job's count table."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     return _hh_admission(
         read_sequence_table(spark, input_dir), candidates, window, None
     )
@@ -1608,8 +1435,6 @@ def calibrate_hist_grid(spark: SparkSession, input_dir: str) -> tuple[int, int]:
     run_bloom_gate_job, run_hh_job) applies verbatim: the GRID is fixed
     ahead of time from a calibration sample; the per-window cell counts
     are exact and online."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     row = (
         read_sequence_table(spark, input_dir)
         .agg(F.min("n_tok").alias("lo"), F.max("n_tok").alias("hi"))
@@ -1685,13 +1510,7 @@ def run_histq_job(
     sink = make_sink(spark, work_dir, ["window_start", "b"], iceberg_table)
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     cells = _histq_window_cells(stream, vmin, vmax, window, watermark)
-    q = (
-        cells.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(cells, "update", work_dir, sink.foreach_batch()), sink
 
 
 def batch_histq_golden(
@@ -1701,8 +1520,6 @@ def batch_histq_golden(
     window: str = "10 minutes",
 ) -> DataFrame:
     """Batch twin of run_histq_job's cell table (same fixed grid)."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     return _histq_window_cells(
         read_sequence_table(spark, input_dir), grid[0], grid[1], window, None
     )
@@ -1719,17 +1536,15 @@ def histq_report(
     LOWER EDGE of the first bucket whose cumulative count reaches
     ceil(q*n), one-sided within (vmax-vmin)/HIST_BUCKETS of the true
     order statistic for in-range values."""
-    from pyspark.sql import Window as W
-
     from parallel_dataflow_spark.operators.sketches import HIST_BUCKETS
 
     vmin, vmax = grid
     win = (
-        W.partitionBy("window_start")
+        Window.partitionBy("window_start")
         .orderBy("b")
-        .rowsBetween(W.unboundedPreceding, 0)
+        .rowsBetween(Window.unboundedPreceding, 0)
     )
-    tot = W.partitionBy("window_start")
+    tot = Window.partitionBy("window_start")
     cum = cells.withColumn("cum", F.sum("cnt").over(win)).withColumn(
         "n", F.sum("cnt").over(tot)
     )
@@ -1814,13 +1629,7 @@ def run_outer_join_job(
     out = W.stream_stream_token_left_join(
         left, right, watermark=watermark, max_delay=max_delay
     )
-    q = (
-        out.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(out, "append", work_dir, sink.foreach_batch()), sink
 
 
 def batch_outer_join_golden(
@@ -1829,8 +1638,6 @@ def batch_outer_join_golden(
     """Batch twin of run_outer_join_job: the IDENTICAL plan function over
     the table at rest — ``withWatermark`` is a no-op in batch queries, so
     stream and twin share every line of the join logic."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     left = read_sequence_table(spark, input_dir)
     right = read_sequence_table(spark, input_dir).filter(_right_feed_filter())
     return W.stream_stream_token_left_join(left, right, max_delay=max_delay)
@@ -1890,13 +1697,7 @@ def run_matview_job(
 
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     regs = _hll_window_registers(stream, window, watermark)
-    q = (
-        regs.writeStream.outputMode("update")
-        .foreachBatch(fb)
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, reg_sink, est_sink
+    return _start(regs, "update", work_dir, fb), reg_sink, est_sink
 
 
 # ---------------------------------------------------------------------------
@@ -1911,8 +1712,6 @@ def calibrate_source_tiers(
     name). The calibrate-offline / enforce-online split producing a
     TABLE instead of literals — the dim is small (one row per source),
     which is exactly what makes the online join broadcastable."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     med = (
         read_sequence_table(spark, input_dir)
         .groupBy("source")
@@ -1984,13 +1783,7 @@ def run_enrich_job(
     sink = make_sink(spark, work_dir, ["window_start", "tier"], iceberg_table)
     stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     agg = _enrich_agg(stream, dim, window, watermark)
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(sink.foreach_batch())
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .start()
-    )
-    return q, sink
+    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
 def batch_enrich_golden(
@@ -2000,7 +1793,33 @@ def batch_enrich_golden(
     window: str = "10 minutes",
 ) -> DataFrame:
     """Batch twin of run_enrich_job's stats table (same dim rows)."""
-    from parallel_dataflow_spark.sources.sequences import read_sequence_table
-
     dim = spark.createDataFrame(tiers, "source string, tier int")
     return _enrich_agg(read_sequence_table(spark, input_dir), dim, window, None)
+
+
+# The deployables the CLI can start by name (``cli stream --job``); the CEP
+# job is left out because it needs a Pattern.
+JOBS = {
+    "tumbling": run_tumbling_job,
+    "sliding": run_sliding_job,
+    "session": run_session_job,
+    "throughput": run_throughput_job,
+    "dedup": run_dedup_job,
+    "join": run_join_job,
+    "pipeline": run_pipeline_job,
+    "neardup": run_neardup_job,
+    "drift": run_drift_job,
+    "mix": run_mix_job,
+    "quota": run_quota_job,
+    "spandedup": run_spandedup_job,
+    "dsirgate": run_dsir_gate_job,
+    "hll": run_hll_job,
+    "cms": run_cms_job,
+    "bloomgate": run_bloom_gate_job,
+    "kmv": run_kmv_job,
+    "hhtrack": run_hh_job,
+    "histq": run_histq_job,
+    "outerjoin": run_outer_join_job,
+    "matview": run_matview_job,
+    "enrich": run_enrich_job,
+}

@@ -23,7 +23,7 @@ exchange carries fixed-width (source, window_start, h, event_ts) rows);
 per-key state is ONE array of ≤ KMV_K int64s — constant regardless of
 how many distinct tokens the window saw (the HLL-register argument
 applied to an order-statistics sketch); a (source, window) that stops
-arriving purges on an event-time timer once the watermark passes
+arriving purges on an event-time timeout once the watermark passes
 window end + ttl. The one cost a batch pass does not pay: every token
 INSTANCE crosses the stateful exchange (streaming offers no pre-state
 map-side distinct) — the rows are 3 ints + a short string, and the
@@ -39,11 +39,6 @@ from pyspark.sql import types as T
 
 from parallel_dataflow_spark.functions.text import md5_60bit
 from parallel_dataflow_spark.operators.sketches import KMV_K
-from parallel_dataflow_spark.streaming.stateful import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    tws_available,
-)
 
 KMV_OUTPUT_SCHEMA = T.StructType(
     [
@@ -79,75 +74,17 @@ def _merge_bottomk(hs: list[int], new: list[int]) -> list[int]:
     return sorted(set(hs).union(new))[:KMV_K]
 
 
-class KmvProcessor(StatefulProcessor):
-    """transformWithStateInPandas KMV processor keyed (source,
-    window_start): ValueState sketch array + one purge timer at
-    window end + ttl (state can never change the final emission after
-    the horizon — it only ever re-derives it — so expiry emits nothing)."""
-
-    def __init__(self, window_sec: int = 600, ttl_sec: int = 600):
-        self._window_ms = int(window_sec) * 1000
-        self._ttl_ms = int(ttl_sec) * 1000
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._hs = handle.getValueState("kmv_hs", "hs array<bigint>")
-
-    def handleInputRows(self, key, rows, timerValues):
-        new: list[int] = []
-        for pdf in rows:
-            if not pdf.empty:
-                new.extend(int(x) for x in pdf["h"].tolist())
-        old = (
-            [int(x) for x in self._hs.get()[0]] if self._hs.exists() else None
-        )
-        merged = _merge_bottomk(old or [], new)
-        if old is None:
-            # first sight of this (source, window): arm the purge timer
-            self._handle.registerTimer(
-                int(key[1]) * 1000 + self._window_ms + self._ttl_ms
-            )
-        if merged != (old or []):
-            self._hs.update((merged,))
-            yield pd.DataFrame(
-                {
-                    "source": [str(key[0])],
-                    "window_start": [int(key[1])],
-                    "hs": [merged],
-                    "sketch_size": [len(merged)],
-                }
-            )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        self._hs.clear()
-        yield from ()
-
-    def close(self) -> None:
-        pass
-
-
 def kmv_stream(
     stream: DataFrame,
     window_sec: int = 600,
     ttl_sec: int = 600,
     watermark: str = "5 minutes",
-    api: str = "auto",
 ) -> DataFrame:
-    """Streaming per-(source, window) bottom-K sketch with the repo's API
-    fallback: 'tws' = transformWithStateInPandas (KmvProcessor), 'apws' =
-    applyInPandasWithState with the same merge (EventTimeTimeout replaces
-    the timer)."""
-    if api == "auto":
-        api = "tws" if tws_available() else "apws"
+    """Streaming per-(source, window) bottom-K sketch: state is the
+    sketch array, merged by union + re-rank; an EventTimeTimeout at
+    window end + ttl removes it (past that horizon the state could only
+    re-derive the final emission, so the timeout emits nothing)."""
     src = kmv_prestage(stream, window_sec).withWatermark("event_ts", watermark)
-    if api == "tws":
-        return src.groupBy("source", "window_start").transformWithStateInPandas(
-            statefulProcessor=KmvProcessor(window_sec, ttl_sec),
-            outputStructType=KMV_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-
     horizon_ms = (int(window_sec) + int(ttl_sec)) * 1000
 
     def kernel(key, pdf_iter, state):

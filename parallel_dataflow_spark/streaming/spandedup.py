@@ -4,7 +4,7 @@ The batch rule (Raffel et al. 2020 S 2.2, cf. operators/dedup.c4_span_dedup
 for the text-side variant): every occurrence of a token span after its
 globally first occurrence is a duplicate. On a stream "globally first"
 must be made batching-invariant, so this module applies the repo's
-buffered-release discipline (CEP / TokenQuotaProcessor): rows keyed by
+buffered-release discipline (CEP / token quota): rows keyed by
 span hash are BUFFERED until the watermark passes them, then folded in
 strict (event_ts, ck) order — the first released row per span hash owns
 the span, every later release is a duplicate. The fold order over all
@@ -22,7 +22,7 @@ Scale shape: spans are exploded and hashed MAP-SIDE (span_prestage) — the
 token payload dies before the stateful exchange, which carries
 (h, event_ts, doc_id, span_idx, ck) fixed-width rows. Per-key state is
 one owner record plus the sub-horizon buffer; a span hash that stops
-arriving retains nothing after its purge timer fires. Emissions carry the
+arriving retains nothing after its purge timeout fires. Emissions carry the
 RUNNING (owner, dup_rows) record per span hash — latest emission per h is
 final, which is exactly what the keyed upsert sink needs under replay.
 
@@ -39,11 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from parallel_dataflow_spark.functions.text import md5_60bit
-from parallel_dataflow_spark.streaming.stateful import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    tws_available,
-)
 
 SPANDEDUP_OUTPUT_SCHEMA = T.StructType(
     [
@@ -108,134 +103,22 @@ def _fold(buf, owner, wm_us):
     return owner, remain, True
 
 
-class SpanDedupProcessor(StatefulProcessor):
-    """transformWithStateInPandas span-dedup processor, keyed by span
-    hash: ListState buffer (the sub-watermark holding pen), ValueState
-    owner record, ONE delete-then-register event-time timer at the
-    earliest actionable instant (min buffered ts, else purge horizon)."""
-
-    def __init__(self, ttl_sec: int = 3600):
-        self._ttl_us = int(ttl_sec) * 1_000_000
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._handle = handle
-        self._buf = handle.getListState(
-            "span_buffer", "ts bigint, ck bigint, doc string, idx bigint"
-        )
-        self._own = handle.getValueState(
-            "span_owner",
-            "own_doc string, own_idx bigint, dup_rows bigint, last_ts bigint",
-        )
-        self._timer = handle.getValueState("span_timer", "t bigint")
-
-    def _advance(self, key, wm_us: int, new_rows: list):
-        buf = [
-            (int(r[0]), int(r[1]), str(r[2]), int(r[3]))
-            for r in (self._buf.get() if self._buf.exists() else [])
-        ]
-        buf.extend(new_rows)
-        owner = None
-        if self._own.exists():
-            o = self._own.get()
-            owner = [str(o[0]), int(o[1]), int(o[2]), int(o[3])]
-        owner, remain, changed = _fold(buf, owner, wm_us)
-
-        if owner is not None and not remain and owner[3] + self._ttl_us <= wm_us:
-            # horizon closed: the record can never change — purge all
-            # state, but emit from the PRE-purge value when this same
-            # advance released rows (a large watermark jump can release
-            # and close in one step — the quota kernel lesson)
-            self._buf.clear()
-            self._own.clear()
-            old = int(self._timer.get()[0]) if self._timer.exists() else None
-            if old is not None:
-                self._handle.deleteTimer(old)
-            self._timer.clear()
-            return owner if changed else None
-        self._buf.clear()
-        if remain:
-            self._buf.put([tuple(r) for r in remain])
-        if owner is not None:
-            self._own.update(tuple(owner))
-        horizons = []
-        if remain:
-            horizons.append(min(r[0] for r in remain) // 1000 + 1)
-        if owner is not None:
-            horizons.append((owner[3] + self._ttl_us) // 1000 + 1)
-        old = int(self._timer.get()[0]) if self._timer.exists() else None
-        if horizons:
-            t_ms = max(min(horizons), wm_us // 1000 + 1)
-            if old != t_ms:
-                if old is not None:
-                    self._handle.deleteTimer(old)
-                self._handle.registerTimer(t_ms)
-                self._timer.update((t_ms,))
-        elif old is not None:
-            self._handle.deleteTimer(old)
-            self._timer.clear()
-        return owner if changed else None
-
-    @staticmethod
-    def _emit(key, owner):
-        if owner is not None:
-            yield pd.DataFrame(
-                {
-                    "h": [int(key[0])],
-                    "owner_doc": [owner[0]],
-                    "owner_idx": [owner[1]],
-                    "dup_rows": [owner[2]],
-                }
-            )
-
-    def handleInputRows(self, key, rows, timerValues):
-        new = []
-        for pdf in rows:
-            if pdf.empty:
-                continue
-            ts = pdf["event_ts"].astype("datetime64[us]").astype("int64")
-            new.extend(
-                zip(
-                    ts.tolist(),
-                    pdf["ck"].astype("int64").tolist(),
-                    pdf["doc_id"].astype(str).tolist(),
-                    pdf["span_idx"].astype("int64").tolist(),
-                )
-            )
-        wm_us = max(timerValues.getCurrentWatermarkInMs(), 0) * 1000
-        yield from self._emit(key, self._advance(key, wm_us, new))
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        wm_us = max(timerValues.getCurrentWatermarkInMs(), 0) * 1000
-        yield from self._emit(key, self._advance(key, wm_us, []))
-
-    def close(self) -> None:
-        pass
-
-
 def span_dedup_stream(
     stream: DataFrame,
     span_tokens: int = 16,
     ttl_sec: int = 3600,
     watermark: str = "10 minutes",
-    api: str = "auto",
 ) -> DataFrame:
-    """Streaming keep-first span dedup with the repo's API fallback:
-    'tws' = transformWithStateInPandas (SpanDedupProcessor), 'apws' =
-    applyInPandasWithState with the SAME buffered-release fold (state
-    tuple = parallel arrays; EventTimeTimeout replaces the timer)."""
-    if api == "auto":
-        api = "tws" if tws_available() else "apws"
+    """Streaming keep-first span dedup keyed by span hash: one state row
+    holds the sub-watermark buffer (parallel arrays) and the owner record;
+    the EventTimeTimeout wakes the key at the earliest actionable instant
+    (min buffered ts, else the purge horizon). When the horizon closes
+    with nothing buffered the state is removed, but a release in the same
+    call still emits its final record (a large watermark jump can release
+    and close in one step)."""
     src = span_prestage(stream, span_tokens).withWatermark(
         "event_ts", watermark
     )
-    if api == "tws":
-        return src.groupBy("h").transformWithStateInPandas(
-            statefulProcessor=SpanDedupProcessor(ttl_sec),
-            outputStructType=SPANDEDUP_OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="eventTime",
-        )
-
     ttl_us = int(ttl_sec) * 1_000_000
 
     def kernel(key, pdf_iter, state):

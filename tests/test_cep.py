@@ -142,13 +142,17 @@ def test_stream_matcher_equals_batch(spark, cep_df, tmp_path):
             "overwrite"
         ).parquet(os.path.join(src, f"chunk={i:04d}"))
 
-    got, _ = _run_stream(
+    got, progress = _run_stream(
         spark, src, PATTERN, "cep_out", tmp_path / "ckpt", watermark="1 minute"
     )
     want = golden_matches(_rows(), PATTERN)
     # the sentinel pushes the watermark past every buffered row, so all
     # matches must have been released and emitted
     assert got == want
+    # doc "negative" ends on a partial that can never complete; once the
+    # watermark passes it by the gap it is pruned, so only the sentinel's
+    # key group still holds state
+    assert progress[-1].stateOperators[0].numRowsTotal <= 1
 
 
 def test_stream_matcher_out_of_order_arrival(spark, cep_df, tmp_path):
@@ -346,6 +350,39 @@ def test_stream_drops_late_row_while_group_holds_state(spark, tmp_path):
     dropped = [p.stateOperators[0] for p in progress if p.stateOperators[0].numRowsDroppedByWatermark]
     assert [op.numRowsDroppedByWatermark for op in dropped] == [2]
     assert dropped[0].numRowsTotal > 0
+
+
+def test_cep_prestage_mask_parity(spark):
+    """The JVM-side step bitmask every CEP path uses == the numpy golden
+    row_step_mask on the same rows."""
+    from parallel_dataflow_spark.sources.sequences import SEQUENCE_SCHEMA
+    from parallel_dataflow_spark.streaming.cep import Pattern, cep_prestage, row_step_mask
+
+    pattern = Pattern.of([[1, 2], [3], [4, 5]], gap_seconds=60)
+    rng = np.random.default_rng(4)
+    base = np.datetime64("2026-01-01T00:00:00", "us")
+    pdf = pd.DataFrame(
+        {
+            "doc_id": [f"d{i % 3}" for i in range(100)],
+            "tokens": [
+                [int(t) for t in rng.integers(0, 8, size=int(rng.integers(0, 5)))]
+                for _ in range(100)
+            ],
+            "n_tok": 0,
+            "source": "web",
+            "event_ts": [base + np.timedelta64(i, "s") for i in range(100)],
+        }
+    )
+    pdf["n_tok"] = pdf["tokens"].map(len)
+    df = spark.createDataFrame(pdf, schema=SEQUENCE_SCHEMA)
+    got = {
+        (r["doc_id"], r["event_ts"]): r["mask"]
+        for r in cep_prestage(df, pattern).collect()
+    }
+    want_mask = row_step_mask(pdf["tokens"], pattern)
+    for i, row in pdf.iterrows():
+        key = (row["doc_id"], row["event_ts"].to_pydatetime())
+        assert got[key] == int(want_mask[i]), key
 
 
 def test_stream_stream_join(spark, tmp_path):

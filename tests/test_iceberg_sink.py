@@ -1,7 +1,6 @@
 """Iceberg exactly-once sink: SQL generation + gating (the runtime jars
 are absent in this sandbox, so the end-to-end test auto-skips here and
-runs on a full cluster image — same gating pattern as the TWS transport
-in test_stateful_tws.py)."""
+runs on a full cluster image)."""
 
 import pytest
 

@@ -1,7 +1,5 @@
 """run_kmv_job (19th deployable): stream-vs-batch sketch differential,
-kill/resume exactly-once, per-window Jaccard report vs exact truth, and
-both stateful APIs (tws double is env-gated elsewhere; apws is the live
-path here).
+kill/resume exactly-once, per-window Jaccard report vs exact truth.
 
 The order-invariance argument under test: bottom-K of a set is the same
 under ANY micro-batch split, so running emissions through the latest-wins
@@ -138,21 +136,6 @@ def test_kmv_window_report_estimates_true_jaccard(spark, tmp_path):
         assert abs(j_est - j) <= 4 * sigma, (ws, s1, s2, j_est, j)
         checked += 1
     assert checked > 0
-
-
-def test_kmv_stream_apis_agree(spark, tmp_path):
-    """tws (handle double unavailable in-stream: tws_available gates) vs
-    apws explicit: when tws is unavailable the auto path IS apws, so pin
-    the explicit api='apws' run equal to auto — and if a future image
-    enables tws, this test compares the two real APIs."""
-    src = _source(spark, tmp_path, n_rows=400, seed=73)
-    q1, s1 = run_kmv_job(spark, src, str(tmp_path / "auto"), api="auto")
-    q1.processAllAvailable()
-    q1.stop()
-    q2, s2 = run_kmv_job(spark, src, str(tmp_path / "apws"), api="apws")
-    q2.processAllAvailable()
-    q2.stop()
-    assert canon(s1.read(spark)) == canon(s2.read(spark))
 
 
 def test_kmv_batch_twin_partitioning_invariant(spark, tmp_path):

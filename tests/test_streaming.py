@@ -208,17 +208,15 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 
 
 def test_running_stats_stateful_matches_batch(spark, seq_dir, tmp_path):
-    """Custom keyed stateful accumulator (transformWithStateInPandas when
-    its protobuf dependency exists, applyInPandasWithState fallback — this
-    sandbox lacks google.protobuf, see stateful.tws_available): the FINAL
-    emission per key must equal the one-shot batch fold."""
+    """Custom keyed stateful accumulator (applyInPandasWithState): the
+    FINAL emission per key must equal the one-shot batch fold."""
     from parallel_dataflow_spark.streaming.stateful import (
         running_doc_stats_batch,
         running_doc_stats_stream,
     )
 
     stream = read_sequence_stream(spark, seq_dir, max_files_per_trigger=3)
-    out = running_doc_stats_stream(stream)  # api='auto'
+    out = running_doc_stats_stream(stream)
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
