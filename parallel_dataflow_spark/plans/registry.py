@@ -5089,7 +5089,7 @@ _SESSIONIZE_ORACLE = """
 def sessionize_events_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch gap-based sessionization (30-minute inactivity gap): the
     SQL-expressible twin of the streaming ``session_window`` job
-    (events_session_5m / run_session_job) — lag marks session starts,
+    (events_session_5m / jobs.run("session")) — lag marks session starts,
     a running sum assigns session ids, two grouped rollups summarize.
     The lag/cumsum construction is the standard batch sessionization at
     any scale.

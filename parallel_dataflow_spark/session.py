@@ -17,6 +17,46 @@ from parallel_dataflow_spark.pkgzip import build_pkg_zip, ensure_on_executors
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Driver heap default: a quarter of the memory the host grants, so two
+# session JVMs (a test suite's and the local[32] determinism probe's)
+# fit side by side with their Python workers. In local mode this heap is
+# the executors' heap too. On a 15.7 GiB host a full Tier-1 run under a
+# fixed 16g heap grew the suite's JVM to 7.3 GB RSS (9.4 GB with the
+# probe's JVM beside it); under this default (4023m) the peaks were
+# 4.3 GB and 7.2 GB.
+HEAP_FRACTION = 0.25
+HEAP_FLOOR_MB = 1024
+CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2; "max" when unlimited
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def default_driver_memory(
+    meminfo: str = "/proc/meminfo", cgroup_limits: tuple[str, ...] = CGROUP_LIMITS
+) -> str:
+    """``spark.driver.memory`` for this host: HEAP_FRACTION of the lesser
+    of MemTotal and every cgroup memory limit that is a number, at least
+    HEAP_FLOOR_MB. Without /proc/meminfo (not Linux) the floor."""
+    try:
+        with open(meminfo) as f:
+            granted = next(
+                int(line.split()[1]) * 1024
+                for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration):
+        return f"{HEAP_FLOOR_MB}m"
+    for path in cgroup_limits:
+        try:
+            with open(path) as f:
+                limit = f.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():
+            granted = min(granted, int(limit))
+    return f"{max(HEAP_FLOOR_MB, int(granted * HEAP_FRACTION) >> 20)}m"
+
 
 def get_spark(
     app_name: str = "parallel_dataflow_spark",
@@ -77,7 +117,10 @@ def get_spark(
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
     )
     if master.startswith("local"):
         # fork Python workers from a daemon that has the zip-directory

@@ -3,11 +3,26 @@ CEP → idempotent exactly-once sink, with checkpointing and metrics.
 
 These are the deployable units (spark-submit --py-files); tests and bench
 drive them over the deterministic generated sequence table.
+
+A deployable shaped "sequence source → plan → keyed sink" is one
+``StreamJob`` row of ``STREAM_JOBS``: its sink key columns, its output
+mode and its plan ``build(spark, input_dir, read, **params)``, whose
+parameter defaults sit in its own signature. ``read(path)`` returns the
+sequence frame at ``path``: a micro-batch stream under ``run`` and the
+table at rest under ``golden``, so one plan is both the deployable and
+its batch differential golden (Spark drops ``withWatermark`` from batch
+plans). ``JOBS`` and the CLI's ``stream --job`` list follow from the
+table. To add a deployable, add its build and one row; write a runner
+of its own on ``_start`` only when the job needs more than one sink
+(``run_matview_job``), a per-batch fold (``run_neardup_job``) or an
+argument the CLI cannot supply (``run_cep_job``'s Pattern).
 """
 
 from __future__ import annotations
 
+import functools
 import os
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -22,6 +37,11 @@ from parallel_dataflow_spark.streaming.cep import Pattern, match_pattern_stream
 from parallel_dataflow_spark.streaming.sink import IdempotentKeyedSink
 
 
+class IcebergUnavailable(RuntimeError):
+    """An Iceberg sink was asked for on a session without the Iceberg
+    runtime."""
+
+
 def make_sink(
     spark: SparkSession,
     work_dir: str,
@@ -30,18 +50,26 @@ def make_sink(
 ):
     """Sink selection for the deployable jobs: the north rule's
     production sink is an Iceberg MERGE upsert (exactly-once via a
-    committed-batch ledger, streaming/iceberg_sink.py); this sandbox has
-    no Iceberg jars, so the default is the keyed idempotent parquet-epoch
-    sink (same duck-typed protocol, same exactly-once argument)."""
-    if iceberg_table is not None:
-        from parallel_dataflow_spark.streaming.iceberg_sink import (
-            IcebergMergeSink,
-            iceberg_available,
+    committed-batch ledger, streaming/iceberg_sink.py); the default is the
+    keyed idempotent parquet-epoch sink under ``<work_dir>/sink`` (same
+    duck-typed protocol, same exactly-once argument). Asking for
+    ``iceberg_table`` on a session without the Iceberg runtime raises
+    IcebergUnavailable rather than writing parquet in its place."""
+    if iceberg_table is None:
+        return IdempotentKeyedSink(
+            os.path.join(work_dir, "sink"), key_cols=key_cols
         )
+    from parallel_dataflow_spark.streaming.iceberg_sink import (
+        IcebergMergeSink,
+        iceberg_available,
+    )
 
-        if iceberg_available(spark):
-            return IcebergMergeSink(iceberg_table, key_cols)
-    return IdempotentKeyedSink(os.path.join(work_dir, "sink"), key_cols=key_cols)
+    if not iceberg_available(spark):
+        raise IcebergUnavailable(
+            f"iceberg_table={iceberg_table!r}: this session has no Iceberg "
+            "runtime (iceberg-spark-runtime jar and SQL extensions)"
+        )
+    return IcebergMergeSink(iceberg_table, key_cols)
 
 
 def _start(
@@ -58,68 +86,84 @@ def _start(
     )
 
 
-def run_tumbling_job(
+class StreamJob(NamedTuple):
+    """One table-driven deployable: the sink's key columns, the output
+    mode, and the plan ``build(spark, input_dir, read, **params)``."""
+
+    key_cols: tuple[str, ...]
+    output_mode: str
+    build: Callable[..., DataFrame]
+    max_files_per_trigger: int = 2
+
+
+def run(
+    name: str,
     spark: SparkSession,
     input_dir: str,
     work_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    salt_buckets: int = 8,
+    max_files_per_trigger: int | None = None,
     iceberg_table: str | None = None,
+    **params,
 ) -> tuple[StreamingQuery, IdempotentKeyedSink]:
-    """The flagship exactly-once job: per-(doc_id, window) token stats,
-    update-mode upserts into the keyed sink (Iceberg MERGE when
-    ``iceberg_table`` is given and the runtime is present — make_sink)."""
-    sink = make_sink(
-        spark, work_dir, ["doc_id", "window_start"], iceberg_table
+    """Start deployable ``name`` over the sequence stream at ``input_dir``
+    into its keyed sink (Iceberg MERGE when ``iceberg_table`` is given —
+    make_sink), checkpointed under ``work_dir``. ``params`` go to the
+    job's build; ``max_files_per_trigger`` defaults to the job's own."""
+    job = STREAM_JOBS[name]
+    if max_files_per_trigger is None:
+        max_files_per_trigger = job.max_files_per_trigger
+    sink = make_sink(spark, work_dir, list(job.key_cols), iceberg_table)
+
+    def read(path: str) -> DataFrame:
+        return read_sequence_stream(spark, path, max_files_per_trigger)
+
+    df = job.build(spark, input_dir, read, **params)
+    return _start(df, job.output_mode, work_dir, sink.foreach_batch()), sink
+
+
+def golden(name: str, spark: SparkSession, input_dir: str, **params) -> DataFrame:
+    """Deployable ``name``'s plan over the sequence table at rest: the
+    batch golden its drained sink must equal. The keyed-state jobs
+    (quota, spandedup, kmv) have none — Spark refuses
+    applyInPandasWithState in a batch query — so their independent batch
+    twins sit next to their kernels (token_quota_batch, span_dedup_batch,
+    kmv_window_batch)."""
+    return STREAM_JOBS[name].build(
+        spark, input_dir, lambda path: read_sequence_table(spark, path), **params
     )
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    stream = W.salted_repartition(stream, "doc_id", salt_buckets)
-    agg = W.tumbling_doc_stats(stream, window=window, watermark=watermark)
-    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
-def run_sliding_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
-    """Sliding-window deployable twin of run_tumbling_job (the north rule
-    names all three window types): per-(source, sliding window) throughput
-    stats, update-mode upserts into the sink keyed (source, window_start).
-    No salted repartition — the source cardinality is tiny and each event
+def _tumbling_plan(
+    spark, input_dir, read, window="10 minutes", watermark="5 minutes",
+    salt_buckets=8,
+) -> DataFrame:
+    """The flagship exactly-once job: per-(doc_id, window) token stats,
+    update-mode upserts into the sink keyed (doc_id, window_start)."""
+    stream = W.salted_repartition(read(input_dir), "doc_id", salt_buckets)
+    return W.tumbling_doc_stats(stream, window=window, watermark=watermark)
+
+
+def _sliding_plan(
+    spark, input_dir, read, window="10 minutes", slide="5 minutes",
+    watermark="5 minutes",
+) -> DataFrame:
+    """Sliding-window twin of the tumbling job (the north rule names all
+    three window types): per-(source, sliding window) throughput stats,
+    update-mode upserts into the sink keyed (source, window_start). No
+    salted repartition — the source cardinality is tiny and each event
     lands in window/slide overlapping windows, so the agg fan-out (not key
     skew) dominates."""
-    sink = make_sink(spark, work_dir, ["source", "window_start"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    agg = W.sliding_source_stats(
-        stream, window=window, slide=slide, watermark=watermark
+    return W.sliding_source_stats(
+        read(input_dir), window=window, slide=slide, watermark=watermark
     )
-    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
-def run_session_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    gap: str = "5 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _session_plan(
+    spark, input_dir, read, gap="5 minutes", watermark="5 minutes"
+) -> DataFrame:
     """Session windows must finalize → append mode; sink keyed by
     (doc_id, session_start)."""
-    sink = IdempotentKeyedSink(
-        os.path.join(work_dir, "sink"), key_cols=["doc_id", "session_start"]
-    )
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    agg = W.session_doc_stats(stream, gap=gap, watermark=watermark)
-    return _start(agg, "append", work_dir, sink.foreach_batch()), sink
+    return W.session_doc_stats(read(input_dir), gap=gap, watermark=watermark)
 
 
 def run_cep_job(
@@ -147,16 +191,10 @@ def run_cep_job(
     return _start(matches, "append", work_dir, sink.foreach_batch()), sink
 
 
-def run_join_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    input_dir_right: str | None = None,
-    watermark: str = "10 minutes",
-    max_delay: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _join_plan(
+    spark, input_dir, read, input_dir_right=None, watermark="10 minutes",
+    max_delay="5 minutes",
+) -> DataFrame:
     """Stateful stream-stream join deployable (north rule): two watermarked
     sequence streams (raw vs re-tokenized feeds; ``input_dir_right``
     defaults to the same directory = self-join shape) inner-joined on
@@ -170,30 +208,16 @@ def run_join_job(
     shuffles BOTH sides by doc_id; token payloads do ride this exchange
     (the join verifies token-checksum equality), which is the inherent
     cost of a content-comparing join."""
-    sink = make_sink(
-        spark,
-        work_dir,
-        ["doc_id", "left_ts", "right_ts", "left_ck", "right_ck"],
-        iceberg_table,
+    return W.stream_stream_token_join(
+        read(input_dir),
+        read(input_dir_right or input_dir),
+        watermark=watermark,
+        max_delay=max_delay,
+        include_checksums=True,
     )
-    left = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    right = read_sequence_stream(
-        spark, input_dir_right or input_dir, max_files_per_trigger
-    )
-    joined = W.stream_stream_token_join(
-        left, right, watermark=watermark, max_delay=max_delay, include_checksums=True
-    )
-    return _start(joined, "append", work_dir, sink.foreach_batch()), sink
 
 
-def run_dedup_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    watermark: str = "2 hours",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _dedup_plan(spark, input_dir, read, watermark="2 hours") -> DataFrame:
     """Streaming exact deduplication: first occurrence of each
     (doc_id, content-fingerprint) wins; replays/retries of the same
     sequence are dropped. Built on dropDuplicatesWithinWatermark, so the
@@ -210,26 +234,19 @@ def run_dedup_job(
     dedup exchange — the stateful shuffle carries only
     (doc_id, fingerprint, n_tok, source, event_ts), ~30 bytes/row instead
     of the ~2 KB token arrays."""
-    sink = make_sink(spark, work_dir, ["doc_id", "fingerprint"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    deduped = (
-        stream.withColumn("fingerprint", F.xxhash64("doc_id", "tokens"))
+    return (
+        read(input_dir)
+        .withColumn("fingerprint", F.xxhash64("doc_id", "tokens"))
         .select("doc_id", "fingerprint", "source", "n_tok", "event_ts")
         .withWatermark("event_ts", watermark)
         .dropDuplicatesWithinWatermark(["doc_id", "fingerprint"])
     )
-    return _start(deduped, "append", work_dir, sink.foreach_batch()), sink
 
 
-def run_throughput_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 4,
-    salt_buckets: int = 8,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _throughput_plan(
+    spark, input_dir, read, window="10 minutes", watermark="5 minutes",
+    salt_buckets=8,
+) -> DataFrame:
     """The bench flagship: token featurization (Arrow-vectorized numpy per
     batch: top-token via bincount + positional checksum) → salted
     repartition → tumbling per-(doc_id, window) agg → exactly-once sink.
@@ -273,15 +290,11 @@ def run_throughput_job(
                 }
             )
 
-    sink = IdempotentKeyedSink(
-        os.path.join(work_dir, "sink"), key_cols=["doc_id", "window_start"]
-    )
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     # featurize MAP-SIDE, before any shuffle: the token payload (the bulk of
     # the bytes) never crosses the exchange — only the small featurized rows
     # do. At 100 TB this is the difference between shuffling terabytes and
     # shuffling gigabytes.
-    feat = stream.mapInPandas(
+    feat = read(input_dir).mapInPandas(
         featurize,
         schema="doc_id string, n_tok int, event_ts timestamp, top_token long, feat_checksum long",
     )
@@ -295,7 +308,7 @@ def run_throughput_job(
         F.hash(F.col("doc_id")),
         F.col("__salt"),
     ).drop("__salt")
-    agg = (
+    return (
         feat.withWatermark("event_ts", watermark)
         .groupBy(F.window("event_ts", window).alias("w"), "doc_id")
         .agg(
@@ -315,20 +328,12 @@ def run_throughput_job(
             "max_top",
         )
     )
-    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
-def run_pipeline_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "2 hours",
-    min_tok: int = 8,
-    max_tok: int = 480,
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _pipeline_plan(
+    spark, input_dir, read, window="10 minutes", watermark="2 hours",
+    min_tok=8, max_tok=480,
+) -> DataFrame:
     """The end-to-end training-data ingestion pipeline as ONE deployable
     stream — the north star's composition, each stage individually
     verified elsewhere:
@@ -338,7 +343,7 @@ def run_pipeline_job(
           outside [min_tok, max_tok] dropped scan-side, token arrays
           projected away BEFORE any stateful exchange)
         → streaming exact dedup (dropDuplicatesWithinWatermark — bounded
-          state, run_dedup_job's shape)
+          state, the dedup job's shape)
         → tumbling per-(source, window) admission stats
         → exactly-once keyed sink (Iceberg MERGE when available).
 
@@ -358,16 +363,15 @@ def run_pipeline_job(
     NOT advance event time — a probe row meant to drain the window tail
     must PASS the gate (tests use a far-future sentinel with an
     identifiable source)."""
-    sink = make_sink(spark, work_dir, ["source", "window_start"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
     gated = (
-        stream.withColumn("fingerprint", F.xxhash64("doc_id", "tokens"))
+        read(input_dir)
+        .withColumn("fingerprint", F.xxhash64("doc_id", "tokens"))
         .withWatermark("event_ts", watermark)
         .filter((F.col("n_tok") >= min_tok) & (F.col("n_tok") <= max_tok))
         .select("doc_id", "fingerprint", "source", "n_tok", "event_ts")
     )
     uniq = gated.dropDuplicatesWithinWatermark(["doc_id", "fingerprint"])
-    agg = (
+    return (
         uniq.groupBy(F.window("event_ts", window).alias("w"), "source")
         .agg(
             F.count("*").alias("n_admitted"),
@@ -380,7 +384,6 @@ def run_pipeline_job(
             "tokens_admitted",
         )
     )
-    return _start(agg, "append", work_dir, sink.foreach_batch()), sink
 
 
 def run_neardup_job(
@@ -424,7 +427,9 @@ def batch_pipeline_golden(
     min_tok: int = 8,
     max_tok: int = 480,
 ) -> DataFrame:
-    """Batch twin of run_pipeline_job (gate → distinct → window agg)."""
+    """Batch twin of the pipeline job (gate → distinct → window agg),
+    written apart from its plan: batch dropDuplicates in place of the
+    streaming dropDuplicatesWithinWatermark."""
     d = (
         read_sequence_table(spark, input_dir)
         .withColumn("fingerprint", F.xxhash64("doc_id", "tokens"))
@@ -445,12 +450,6 @@ def batch_pipeline_golden(
             "tokens_admitted",
         )
     )
-
-
-def batch_tumbling_golden(spark: SparkSession, input_dir: str, window: str = "10 minutes") -> DataFrame:
-    """Batch twin of run_tumbling_job's aggregation (the differential
-    golden; withWatermark is a no-op on batch DataFrames)."""
-    return W.tumbling_doc_stats(read_sequence_table(spark, input_dir), window=window)
 
 
 def _bucket_hist_kernel(n_buckets: int):
@@ -484,16 +483,14 @@ def _bucket_hist_kernel(n_buckets: int):
 
 
 def _drift_hist(
-    df: DataFrame, n_buckets: int, window: str, watermark: str | None
+    df: DataFrame, n_buckets: int, window: str, watermark: str
 ) -> DataFrame:
     """Shared stream/batch drift plan: map-side bucket histograms, then
     per-(window, source, pos) sums."""
     feat = df.mapInPandas(
         _bucket_hist_kernel(n_buckets),
         schema="source string, event_ts timestamp, hist array<bigint>",
-    )
-    if watermark is not None:
-        feat = feat.withWatermark("event_ts", watermark)
+    ).withWatermark("event_ts", watermark)
     return (
         feat.select("source", "event_ts", F.posexplode("hist").alias("pos", "cnt"))
         .groupBy(F.window("event_ts", window).alias("w"), "source", "pos")
@@ -502,16 +499,10 @@ def _drift_hist(
     )
 
 
-def run_drift_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    n_buckets: int = 32,
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _drift_plan(
+    spark, input_dir, read, window="10 minutes", watermark="5 minutes",
+    n_buckets=32,
+) -> DataFrame:
     """Streaming corpus-drift monitor — the deployable twin of the batch
     ``token_js_divergence_by_source`` entry: per (source, window), the
     bucketed token distribution, published as an exactly-once table
@@ -524,29 +515,13 @@ def run_drift_job(
     bounded by windows x sources x n_buckets regardless of corpus size —
     and the group-key space is naturally spread (no salting needed: every
     source fans out over n_buckets keys)."""
-    sink = make_sink(
-        spark, work_dir, ["source", "window_start", "pos"], iceberg_table
-    )
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    agg = _drift_hist(stream, n_buckets, window, watermark)
-    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
-
-
-def batch_drift_golden(
-    spark: SparkSession,
-    input_dir: str,
-    window: str = "10 minutes",
-    n_buckets: int = 32,
-) -> DataFrame:
-    """Batch twin of run_drift_job's histogram table (the differential
-    golden for the stream-vs-batch test)."""
-    return _drift_hist(read_sequence_table(spark, input_dir), n_buckets, window, None)
+    return _drift_hist(read(input_dir), n_buckets, window, watermark)
 
 
 def drift_report(hist: DataFrame) -> DataFrame:
     """Per (source, window): Jensen-Shannon divergence between the
     source's bucketed token distribution and the window's global mix,
-    computed from the histogram table run_drift_job publishes. The input
+    computed from the histogram table the drift job publishes. The input
     is bucket-bounded (windows x sources x n_buckets rows), so every
     join here is small; the dense JS sum (p = 0 for buckets a source
     never hit) mirrors the batch entry's oracle formulation. 6-dp
@@ -584,7 +559,7 @@ def calibrate_mix_rates(
     input_dir: str,
     target: dict[str, float] | None = None,
 ) -> list[tuple[str, int]]:
-    """Offline mixture calibration for run_mix_job (the lambda pattern:
+    """Offline mixture calibration for the mix job (the lambda pattern:
     rates are computed batch-side over a calibration corpus, then applied
     as a static broadcast in the stream). Same math as
     operators/mixing.resample_to_mix: cap = min_s(T_s / f_s), rate =
@@ -627,7 +602,7 @@ def calibrate_mix_rates(
 
 
 def _mix_volume(
-    df: DataFrame, rates: list[tuple[str, int]], window: str, watermark: str | None
+    df: DataFrame, rates: list[tuple[str, int]], window: str, watermark: str
 ) -> DataFrame:
     """Shared stream/batch mix plan: broadcast threshold join + seedless
     hash acceptance (token arrays projected away BEFORE any exchange),
@@ -641,9 +616,8 @@ def _mix_volume(
         .withColumn("u", u)
         .join(F.broadcast(rdf), "source")
         .filter(F.col("u") < F.col("thresh"))
+        .withWatermark("event_ts", watermark)
     )
-    if watermark is not None:
-        kept = kept.withWatermark("event_ts", watermark)
     return (
         kept.groupBy(F.window("event_ts", window).alias("w"), "source")
         .agg(
@@ -659,16 +633,10 @@ def _mix_volume(
     )
 
 
-def run_mix_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    rates: list[tuple[str, int]] | None = None,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _mix_plan(
+    spark, input_dir, read, rates=None, window="10 minutes",
+    watermark="5 minutes",
+) -> DataFrame:
     """Streaming mixture resampler — the deployable twin of the batch
     ``resample_uniform_mix`` entry: documents are accepted by the
     batch-calibrated per-source hash threshold (``rates``; calibrated
@@ -684,34 +652,13 @@ def run_mix_job(
     at the same cost as the input scan."""
     if rates is None:
         rates = calibrate_mix_rates(spark, input_dir)
-    sink = make_sink(spark, work_dir, ["source", "window_start"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    agg = _mix_volume(stream, rates, window, watermark)
-    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
+    return _mix_volume(read(input_dir), rates, window, watermark)
 
 
-def batch_mix_golden(
-    spark: SparkSession,
-    input_dir: str,
-    rates: list[tuple[str, int]],
-    window: str = "10 minutes",
+def _quota_plan(
+    spark, input_dir, read, budget=2_000, window_sec=600, ttl_sec=600,
+    watermark="5 minutes",
 ) -> DataFrame:
-    """Batch twin of run_mix_job's kept-volume table (the stream-vs-batch
-    differential golden)."""
-    return _mix_volume(read_sequence_table(spark, input_dir), rates, window, None)
-
-
-def run_quota_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    budget: int = 2_000,
-    window_sec: int = 600,
-    ttl_sec: int = 600,
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 4,
-    iceberg_table: str | None = None,
-):
     """Streaming windowed quota enforcement — the deployable face of
     token_quota_stream (streaming/stateful.py) and
     the 13th deployable: sequences are admitted per (source, event-time
@@ -728,22 +675,15 @@ def run_quota_job(
     ingest caps a runaway source before it pollutes the mix."""
     from parallel_dataflow_spark.streaming.stateful import token_quota_stream
 
-    sink = make_sink(spark, work_dir, ["source", "window_start"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    out = token_quota_stream(stream, budget, window_sec, ttl_sec, watermark)
-    return _start(out, "append", work_dir, sink.foreach_batch()), sink
+    return token_quota_stream(
+        read(input_dir), budget, window_sec, ttl_sec, watermark
+    )
 
 
-def run_spandedup_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    span_tokens: int = 16,
-    ttl_sec: int = 3600,
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 4,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _spandedup_plan(
+    spark, input_dir, read, span_tokens=16, ttl_sec=3600,
+    watermark="5 minutes",
+) -> DataFrame:
     """Streaming C4-style keep-first span dedup — the 14th deployable:
     non-overlapping ``span_tokens``-token spans are hashed map-side, and
     per span hash the buffered-release state kernel
@@ -761,10 +701,7 @@ def run_spandedup_job(
     it floods in instead of in a nightly batch pass."""
     from parallel_dataflow_spark.streaming.spandedup import span_dedup_stream
 
-    sink = make_sink(spark, work_dir, ["h"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    out = span_dedup_stream(stream, span_tokens, ttl_sec, watermark)
-    return _start(out, "append", work_dir, sink.foreach_batch()), sink
+    return span_dedup_stream(read(input_dir), span_tokens, ttl_sec, watermark)
 
 
 def calibrate_dsir_lr(
@@ -849,18 +786,10 @@ def _dsir_admission(df: DataFrame, lr_micro: list[int], buckets: int,
     )
 
 
-def run_dsir_gate_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    target_source: str = "wiki",
-    buckets: int = 1024,
-    lr_micro: list[int] | None = None,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _dsirgate_plan(
+    spark, input_dir, read, target_source="wiki", buckets=1024,
+    lr_micro=None, window="10 minutes", watermark="5 minutes",
+) -> DataFrame:
     """Streaming DSIR admission gate — the 15th deployable and the
     calibrate-offline / enforce-online twin of the batch
     ``dsir_select_docs`` entry (Xie et al. 2023): sequences whose hashed-
@@ -878,26 +807,11 @@ def run_dsir_gate_job(
     batching, or replay."""
     if lr_micro is None:
         lr_micro = calibrate_dsir_lr(spark, input_dir, target_source, buckets)
-    sink = make_sink(
-        spark, work_dir, ["source", "window_start"], iceberg_table
-    )
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    agg = _dsir_admission(
-        stream.withWatermark("event_ts", watermark), lr_micro, buckets, window
-    )
-    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
-
-
-def batch_dsir_gate_golden(
-    spark: SparkSession,
-    input_dir: str,
-    lr_micro: list[int],
-    buckets: int = 1024,
-    window: str = "10 minutes",
-) -> DataFrame:
-    """Batch twin of run_dsir_gate_job's admission table."""
     return _dsir_admission(
-        read_sequence_table(spark, input_dir), lr_micro, buckets, window
+        read(input_dir).withWatermark("event_ts", watermark),
+        lr_micro,
+        buckets,
+        window,
     )
 
 
@@ -905,7 +819,7 @@ def batch_dsir_gate_golden(
 # Streaming HLL cardinality: per-window distinct-doc_id registers
 # ---------------------------------------------------------------------------
 
-def _hll_window_registers(df: DataFrame, window: str, watermark: str | None) -> DataFrame:
+def _hll_window_registers(df: DataFrame, window: str, watermark: str) -> DataFrame:
     """Per-(window, bucket) max-rho register rows from the sequence
     stream/table. The md5 bucket/rho derivation is scan-side; the only
     stateful stage is the (window, bucket) max agg whose state is ≤ 2^p
@@ -917,9 +831,7 @@ def _hll_window_registers(df: DataFrame, window: str, watermark: str | None) -> 
     bucket, rho = hll_rho(F.col("doc_id").cast("string"))
     pre = df.select(
         "event_ts", bucket.alias("bucket"), rho.alias("rho")
-    )
-    if watermark is not None:
-        pre = pre.withWatermark("event_ts", watermark)
+    ).withWatermark("event_ts", watermark)
     return (
         pre.groupBy(F.window("event_ts", window).alias("w"), "bucket")
         .agg(F.max("rho").alias("rho"))
@@ -931,28 +843,19 @@ def _hll_window_registers(df: DataFrame, window: str, watermark: str | None) -> 
     )
 
 
-def run_hll_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _hll_plan(
+    spark, input_dir, read, window="10 minutes", watermark="5 minutes"
+) -> DataFrame:
     """Streaming HLL distinct-documents-per-window — the 16th deployable.
 
     Update-mode running register emissions through the latest-wins keyed
     sink (key = (window_start, bucket)) converge to the exact batch
     registers under any batching/replay because max() is monotone — the
-    running-totals sink argument (run_quota_job) applied to a sketch.
+    running-totals sink argument (the quota job) applied to a sketch.
     Registers stay mergeable downstream: a global or coarser-grain
     cardinality is one groupBy-max away from the sink table, with no
     reprocessing of the stream."""
-    sink = make_sink(spark, work_dir, ["window_start", "bucket"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    regs = _hll_window_registers(stream, window, watermark)
-    return _start(regs, "update", work_dir, sink.foreach_batch()), sink
+    return _hll_window_registers(read(input_dir), window, watermark)
 
 
 def hll_report(registers: DataFrame) -> DataFrame:
@@ -966,18 +869,11 @@ def hll_report(registers: DataFrame) -> DataFrame:
     )
 
 
-def batch_hll_golden(
-    spark: SparkSession, input_dir: str, window: str = "10 minutes"
-) -> DataFrame:
-    """Batch twin of run_hll_job's register table."""
-    return _hll_window_registers(read_sequence_table(spark, input_dir), window, None)
-
-
 # ---------------------------------------------------------------------------
 # Streaming Count-Min: per-window token-frequency sketch cells
 # ---------------------------------------------------------------------------
 
-def _cms_window_cells(df: DataFrame, window: str, watermark: str | None) -> DataFrame:
+def _cms_window_cells(df: DataFrame, window: str, watermark: str) -> DataFrame:
     """Per-(window, cell) counts over the token stream. Tokens explode
     map-side into CMS cell ids (token arrays die at the scan — only
     fixed-width (event_ts, cell) rows reach the stateful agg); state is
@@ -994,9 +890,7 @@ def _cms_window_cells(df: DataFrame, window: str, watermark: str | None) -> Data
                 )
             )
         ).alias("cell"),
-    )
-    if watermark is not None:
-        pre = pre.withWatermark("event_ts", watermark)
+    ).withWatermark("event_ts", watermark)
     return (
         pre.groupBy(F.window("event_ts", window).alias("w"), "cell")
         .agg(F.count("*").alias("cnt"))
@@ -1008,29 +902,20 @@ def _cms_window_cells(df: DataFrame, window: str, watermark: str | None) -> Data
     )
 
 
-def run_cms_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _cms_plan(
+    spark, input_dir, read, window="10 minutes", watermark="5 minutes"
+) -> DataFrame:
     """Streaming Count-Min token-frequency sketch — the 17th deployable,
-    the sum-mergeable sibling of run_hll_job's max-mergeable registers.
+    the sum-mergeable sibling of the hll job's max-mergeable registers.
 
     Update-mode emits RUNNING cell counts; counts are associative sums of
     exact integers, so the emissions are batching-invariant and the
     latest-wins keyed sink (key = (window_start, cell)) converges to the
     exact batch cell table under any replay — the running-totals argument
-    (run_quota_job) applied to a sketch. Any token's frequency estimate
+    (the quota job) applied to a sketch. Any token's frequency estimate
     in any window is then a constant-time min over depth cells of the
     sink table, with the one-sided CMS guarantee."""
-    sink = make_sink(spark, work_dir, ["window_start", "cell"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    cells = _cms_window_cells(stream, window, watermark)
-    return _start(cells, "update", work_dir, sink.foreach_batch()), sink
+    return _cms_window_cells(read(input_dir), window, watermark)
 
 
 def cms_report(cells: DataFrame, probe_tokens: list[int]) -> DataFrame:
@@ -1066,13 +951,6 @@ def cms_report(cells: DataFrame, probe_tokens: list[int]) -> DataFrame:
             .alias("cms_estimate"),
         )
     )
-
-
-def batch_cms_golden(
-    spark: SparkSession, input_dir: str, window: str = "10 minutes"
-) -> DataFrame:
-    """Batch twin of run_cms_job's cell table."""
-    return _cms_window_cells(read_sequence_table(spark, input_dir), window, None)
 
 
 def cms_rollup(cells: DataFrame, grain_seconds: int = 3600) -> DataFrame:
@@ -1189,17 +1067,10 @@ def _bloom_admission(df: DataFrame, words: list[int], window: str) -> DataFrame:
     )
 
 
-def run_bloom_gate_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    bench_source: str = "wiki",
-    bloom_words: list[int] | None = None,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _bloomgate_plan(
+    spark, input_dir, read, bench_source="wiki", bloom_words=None,
+    window="10 minutes", watermark="5 minutes",
+) -> DataFrame:
     """Streaming Bloom contamination gate — the 18th deployable and the
     online face of the batch ``sketch_bloom_contamination`` entry: every
     arriving sequence's token trigrams are membership-tested against a
@@ -1219,34 +1090,14 @@ def run_bloom_gate_job(
     batch row for row under any partitioning, batching, or replay."""
     if bloom_words is None:
         bloom_words = calibrate_bloom_filter(spark, input_dir, bench_source)
-    sink = make_sink(spark, work_dir, ["source", "window_start"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    agg = _bloom_admission(
-        stream.withWatermark("event_ts", watermark), bloom_words, window
+    return _bloom_admission(
+        read(input_dir).withWatermark("event_ts", watermark), bloom_words, window
     )
-    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
 
 
-def batch_bloom_gate_golden(
-    spark: SparkSession,
-    input_dir: str,
-    bloom_words: list[int],
-    window: str = "10 minutes",
+def _kmv_plan(
+    spark, input_dir, read, window_sec=600, ttl_sec=600, watermark="5 minutes"
 ) -> DataFrame:
-    """Batch twin of run_bloom_gate_job's contamination table."""
-    return _bloom_admission(read_sequence_table(spark, input_dir), bloom_words, window)
-
-
-def run_kmv_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    window_sec: int = 600,
-    ttl_sec: int = 600,
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
     """Streaming KMV bottom-k vocabulary sketch — the 19th deployable and
     the online face of the batch ``corpus_overlap_kmv`` entry: every
     (source, event-time window) keeps the K smallest distinct token
@@ -1265,19 +1116,7 @@ def run_kmv_job(
     no buffered-release machinery needed."""
     from parallel_dataflow_spark.streaming.kmvstream import kmv_stream
 
-    sink = make_sink(spark, work_dir, ["source", "window_start"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    out = kmv_stream(stream, window_sec, ttl_sec, watermark)
-    return _start(out, "append", work_dir, sink.foreach_batch()), sink
-
-
-def batch_kmv_golden(
-    spark: SparkSession, input_dir: str, window_sec: int = 600
-) -> DataFrame:
-    """Batch twin of run_kmv_job's sketch table."""
-    from parallel_dataflow_spark.streaming.kmvstream import kmv_window_batch
-
-    return kmv_window_batch(read_sequence_table(spark, input_dir), window_sec)
+    return kmv_stream(read(input_dir), window_sec, ttl_sec, watermark)
 
 
 # ---------------------------------------------------------------------------
@@ -1311,7 +1150,7 @@ def calibrate_hh_candidates(
     is arrival-order-dependent, which the repo's deterministic-stream
     discipline forbids as state); TRACKING the discovered keys online is
     exact, deterministic, and bounded — the calibrate-offline /
-    enforce-online split of run_mix_job applied to frequency."""
+    enforce-online split of the mix job applied to frequency."""
     from parallel_dataflow_spark.operators.heavy_hitters import heavy_hitters_exact
     items = read_sequence_table(spark, input_dir).select(
         _token_bigrams().alias("bg")
@@ -1321,7 +1160,7 @@ def calibrate_hh_candidates(
 
 
 def _hh_admission(
-    df: DataFrame, candidates: list[str], window: str, watermark: str | None
+    df: DataFrame, candidates: list[str], window: str, watermark: str
 ) -> DataFrame:
     """Shared stream/batch plan: per-(window, candidate-bigram) exact
     counts plus a '*' row carrying the window's total bigram count (the
@@ -1339,9 +1178,7 @@ def _hh_admission(
         F.lit("*").alias("key"),
         F.greatest(F.size("tokens") - 1, F.lit(0)).cast("long").alias("w"),
     )
-    u = cand.unionByName(total)
-    if watermark is not None:
-        u = u.withWatermark("event_ts", watermark)
+    u = cand.unionByName(total).withWatermark("event_ts", watermark)
     return (
         u.groupBy(F.window("event_ts", window).alias("wd"), "key")
         .agg(F.sum("w").cast("long").alias("cnt"))
@@ -1353,17 +1190,10 @@ def _hh_admission(
     )
 
 
-def run_hh_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    theta: float = 0.002,
-    candidates: list[str] | None = None,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _hhtrack_plan(
+    spark, input_dir, read, theta=0.002, candidates=None,
+    window="10 minutes", watermark="5 minutes",
+) -> DataFrame:
     """Streaming heavy-hitter tracker — the 20th deployable and the
     online face of the graded ``heavy_hitter_bigrams_mg`` entry: token
     bigrams discovered heavy by the batch MG pass are counted EXACTLY
@@ -1376,29 +1206,14 @@ def run_hh_job(
     map-side at the explode, and the stateful exchange carries candidate
     instances + one row per sequence. Counts are associative BIGINT sums
     → running update-mode emissions converge through the latest-wins
-    sink under any batching or replay (the run_cms_job argument).
+    sink under any batching or replay (the cms job's argument).
     Honest scope note: keys that FIRST become heavy after calibration
     are not tracked until recalibration — online discovery would need
     order-dependent MG state, which the deterministic-stream discipline
     rules out; discovery is the batch pass's job."""
     if candidates is None:
         candidates = calibrate_hh_candidates(spark, input_dir, theta)
-    sink = make_sink(spark, work_dir, ["window_start", "key"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    agg = _hh_admission(stream, candidates, window, watermark)
-    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
-
-
-def batch_hh_golden(
-    spark: SparkSession,
-    input_dir: str,
-    candidates: list[str],
-    window: str = "10 minutes",
-) -> DataFrame:
-    """Batch twin of run_hh_job's count table."""
-    return _hh_admission(
-        read_sequence_table(spark, input_dir), candidates, window, None
-    )
+    return _hh_admission(read(input_dir), candidates, window, watermark)
 
 
 def hh_report(rows: DataFrame, theta: float = 0.0) -> DataFrame:
@@ -1431,8 +1246,8 @@ def calibrate_hist_grid(spark: SparkSession, input_dir: str) -> tuple[int, int]:
     A data-dependent grid (the batch histogram_quantiles' first pass)
     cannot be streaming state: it would make every bucket id depend on
     rows not yet seen, i.e. a second stateful stage feeding the first.
-    The calibrate-offline / enforce-online split (run_mix_job,
-    run_bloom_gate_job, run_hh_job) applies verbatim: the GRID is fixed
+    The calibrate-offline / enforce-online split (the mix, bloomgate and
+    hhtrack jobs) applies verbatim: the GRID is fixed
     ahead of time from a calibration sample; the per-window cell counts
     are exact and online."""
     row = (
@@ -1444,7 +1259,7 @@ def calibrate_hist_grid(spark: SparkSession, input_dir: str) -> tuple[int, int]:
 
 
 def _histq_window_cells(
-    df: DataFrame, vmin: int, vmax: int, window: str, watermark: str | None
+    df: DataFrame, vmin: int, vmax: int, window: str, watermark: str
 ) -> DataFrame:
     """Per-(window, bucket) exact counts of n_tok on the calibrated fixed
     grid. Bucket ids are a scan-side literal expression (no state, no
@@ -1466,9 +1281,9 @@ def _histq_window_cells(
                 F.floor((F.col("n_tok") - F.lit(vmin)) / F.lit(w)).cast("int"),
             ),
         )
-    pre = df.select("event_ts", bucket.alias("b"))
-    if watermark is not None:
-        pre = pre.withWatermark("event_ts", watermark)
+    pre = df.select("event_ts", bucket.alias("b")).withWatermark(
+        "event_ts", watermark
+    )
     return (
         pre.groupBy(F.window("event_ts", window).alias("wd"), "b")
         .agg(F.count("*").cast("long").alias("cnt"))
@@ -1480,16 +1295,10 @@ def _histq_window_cells(
     )
 
 
-def run_histq_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    grid: tuple[int, int] | None = None,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _histq_plan(
+    spark, input_dir, read, grid=None, window="10 minutes",
+    watermark="5 minutes",
+) -> DataFrame:
     """Streaming sequence-length histogram — the 21st deployable and the
     online face of the batch histogram_quantiles sketch (HLL =
     cardinality, CMS = frequency, histogram = quantiles; this completes
@@ -1503,26 +1312,11 @@ def run_histq_job(
     <= HIST_BUCKETS rows per window. Cell counts are associative BIGINT
     sums, so update-mode running emissions converge through the
     latest-wins keyed sink (key = (window_start, b)) under any batching
-    or replay — the run_cms_job argument on a different cell geometry."""
+    or replay — the cms job's argument on a different cell geometry."""
     if grid is None:
         grid = calibrate_hist_grid(spark, input_dir)
     vmin, vmax = grid
-    sink = make_sink(spark, work_dir, ["window_start", "b"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    cells = _histq_window_cells(stream, vmin, vmax, window, watermark)
-    return _start(cells, "update", work_dir, sink.foreach_batch()), sink
-
-
-def batch_histq_golden(
-    spark: SparkSession,
-    input_dir: str,
-    grid: tuple[int, int],
-    window: str = "10 minutes",
-) -> DataFrame:
-    """Batch twin of run_histq_job's cell table (same fixed grid)."""
-    return _histq_window_cells(
-        read_sequence_table(spark, input_dir), grid[0], grid[1], window, None
-    )
+    return _histq_window_cells(read(input_dir), vmin, vmax, window, watermark)
 
 
 def histq_report(
@@ -1590,15 +1384,9 @@ def _right_feed_filter():
     return F.pmod(F.xxhash64(F.col("doc_id")), F.lit(10)) != 0
 
 
-def run_outer_join_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    watermark: str = "10 minutes",
-    max_delay: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _outerjoin_plan(
+    spark, input_dir, read, watermark="10 minutes", max_delay="5 minutes"
+) -> DataFrame:
     """Missing-retokenization detector — the 22nd deployable and the
     engine's only WATERMARK-EXPIRY EMISSION path: a left-outer
     stream-stream join of the raw feed against a (simulated, hash-
@@ -1616,31 +1404,12 @@ def run_outer_join_job(
     idempotently. Honest scope note: a finite test stream needs a
     trailing flush row to push the watermark past the last real event —
     an unbounded production stream advances it for free."""
-    sink = make_sink(
-        spark,
-        work_dir,
-        ["doc_id", "left_ts", "left_ck", "right_ts_s", "right_ck"],
-        iceberg_table,
+    return W.stream_stream_token_left_join(
+        read(input_dir),
+        read(input_dir).filter(_right_feed_filter()),
+        watermark=watermark,
+        max_delay=max_delay,
     )
-    left = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    right = read_sequence_stream(spark, input_dir, max_files_per_trigger).filter(
-        _right_feed_filter()
-    )
-    out = W.stream_stream_token_left_join(
-        left, right, watermark=watermark, max_delay=max_delay
-    )
-    return _start(out, "append", work_dir, sink.foreach_batch()), sink
-
-
-def batch_outer_join_golden(
-    spark: SparkSession, input_dir: str, max_delay: str = "5 minutes"
-) -> DataFrame:
-    """Batch twin of run_outer_join_job: the IDENTICAL plan function over
-    the table at rest — ``withWatermark`` is a no-op in batch queries, so
-    stream and twin share every line of the join logic."""
-    left = read_sequence_table(spark, input_dir)
-    right = read_sequence_table(spark, input_dir).filter(_right_feed_filter())
-    return W.stream_stream_token_left_join(left, right, max_delay=max_delay)
 
 
 # ---------------------------------------------------------------------------
@@ -1723,7 +1492,7 @@ def calibrate_source_tiers(
 
 
 def _enrich_agg(
-    df: DataFrame, dim: DataFrame, window: str, watermark: str | None
+    df: DataFrame, dim: DataFrame, window: str, watermark: str
 ) -> DataFrame:
     """Shared stream/batch plan: broadcast-join the per-source tier dim
     onto the feed (stream-static join — stateless, no watermark
@@ -1735,9 +1504,7 @@ def _enrich_agg(
         "event_ts",
         F.coalesce(F.col("tier"), F.lit(0)).alias("tier"),
         "n_tok",
-    )
-    if watermark is not None:
-        pre = pre.withWatermark("event_ts", watermark)
+    ).withWatermark("event_ts", watermark)
     return (
         pre.groupBy(F.window("event_ts", window).alias("wd"), "tier")
         .agg(
@@ -1753,16 +1520,10 @@ def _enrich_agg(
     )
 
 
-def run_enrich_job(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    tiers: list[tuple[str, int]] | None = None,
-    window: str = "10 minutes",
-    watermark: str = "5 minutes",
-    max_files_per_trigger: int = 2,
-    iceberg_table: str | None = None,
-) -> tuple[StreamingQuery, IdempotentKeyedSink]:
+def _enrich_plan(
+    spark, input_dir, read, tiers=None, window="10 minutes",
+    watermark="5 minutes",
+) -> DataFrame:
     """Stream-static enrichment — the 24th deployable and the one join
     topology the engine didn't yet exercise: a BATCH dimension table
     (per-source quality tiers from calibrate_source_tiers) broadcast
@@ -1775,51 +1536,59 @@ def run_enrich_job(
     corpus size) — a BroadcastHashJoin at the scan with zero shuffle and
     zero state; the only stateful stage is the tier-bounded window agg.
     Counts/sums are associative BIGINT → the latest-wins sink converges
-    under any batching or replay (the run_cms_job argument). Unlisted
+    under any batching or replay (the cms job's argument). Unlisted
     sources keep flowing as tier 0 — enrichment must never drop data."""
     if tiers is None:
         tiers = calibrate_source_tiers(spark, input_dir)
     dim = spark.createDataFrame(tiers, "source string, tier int")
-    sink = make_sink(spark, work_dir, ["window_start", "tier"], iceberg_table)
-    stream = read_sequence_stream(spark, input_dir, max_files_per_trigger)
-    agg = _enrich_agg(stream, dim, window, watermark)
-    return _start(agg, "update", work_dir, sink.foreach_batch()), sink
+    return _enrich_agg(read(input_dir), dim, window, watermark)
 
 
-def batch_enrich_golden(
-    spark: SparkSession,
-    input_dir: str,
-    tiers: list[tuple[str, int]],
-    window: str = "10 minutes",
-) -> DataFrame:
-    """Batch twin of run_enrich_job's stats table (same dim rows)."""
-    dim = spark.createDataFrame(tiers, "source string, tier int")
-    return _enrich_agg(read_sequence_table(spark, input_dir), dim, window, None)
+STREAM_JOBS: dict[str, StreamJob] = {
+    "tumbling": StreamJob(("doc_id", "window_start"), "update", _tumbling_plan),
+    "sliding": StreamJob(("source", "window_start"), "update", _sliding_plan),
+    "session": StreamJob(("doc_id", "session_start"), "append", _session_plan),
+    "throughput": StreamJob(
+        ("doc_id", "window_start"), "update", _throughput_plan, 4
+    ),
+    "dedup": StreamJob(("doc_id", "fingerprint"), "append", _dedup_plan),
+    "join": StreamJob(
+        ("doc_id", "left_ts", "right_ts", "left_ck", "right_ck"),
+        "append",
+        _join_plan,
+    ),
+    "pipeline": StreamJob(("source", "window_start"), "append", _pipeline_plan),
+    "drift": StreamJob(("source", "window_start", "pos"), "update", _drift_plan),
+    "mix": StreamJob(("source", "window_start"), "update", _mix_plan),
+    "quota": StreamJob(("source", "window_start"), "append", _quota_plan, 4),
+    "spandedup": StreamJob(("h",), "append", _spandedup_plan, 4),
+    "dsirgate": StreamJob(("source", "window_start"), "update", _dsirgate_plan),
+    "hll": StreamJob(("window_start", "bucket"), "update", _hll_plan),
+    "cms": StreamJob(("window_start", "cell"), "update", _cms_plan),
+    "bloomgate": StreamJob(("source", "window_start"), "update", _bloomgate_plan),
+    "kmv": StreamJob(("source", "window_start"), "append", _kmv_plan),
+    "hhtrack": StreamJob(("window_start", "key"), "update", _hhtrack_plan),
+    "histq": StreamJob(("window_start", "b"), "update", _histq_plan),
+    "outerjoin": StreamJob(
+        ("doc_id", "left_ts", "left_ck", "right_ts_s", "right_ck"),
+        "append",
+        _outerjoin_plan,
+    ),
+    "enrich": StreamJob(("window_start", "tier"), "update", _enrich_plan),
+}
 
+# bench.py's entry points into the table.
+run_pipeline_job = functools.partial(run, "pipeline")
+run_throughput_job = functools.partial(run, "throughput")
 
-# The deployables the CLI can start by name (``cli stream --job``); the CEP
-# job is left out because it needs a Pattern.
+# The deployables the CLI can start by name (``cli stream --job``), in its
+# listing order; the CEP job is left out because it needs a Pattern.
+_RUNNERS = {"neardup": run_neardup_job, "matview": run_matview_job}
 JOBS = {
-    "tumbling": run_tumbling_job,
-    "sliding": run_sliding_job,
-    "session": run_session_job,
-    "throughput": run_throughput_job,
-    "dedup": run_dedup_job,
-    "join": run_join_job,
-    "pipeline": run_pipeline_job,
-    "neardup": run_neardup_job,
-    "drift": run_drift_job,
-    "mix": run_mix_job,
-    "quota": run_quota_job,
-    "spandedup": run_spandedup_job,
-    "dsirgate": run_dsir_gate_job,
-    "hll": run_hll_job,
-    "cms": run_cms_job,
-    "bloomgate": run_bloom_gate_job,
-    "kmv": run_kmv_job,
-    "hhtrack": run_hh_job,
-    "histq": run_histq_job,
-    "outerjoin": run_outer_join_job,
-    "matview": run_matview_job,
-    "enrich": run_enrich_job,
+    name: _RUNNERS.get(name) or functools.partial(run, name)
+    for name in (
+        "tumbling sliding session throughput dedup join pipeline neardup "
+        "drift mix quota spandedup dsirgate hll cms bloomgate kmv hhtrack "
+        "histq outerjoin matview enrich"
+    ).split()
 }

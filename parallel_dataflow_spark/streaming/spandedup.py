@@ -11,7 +11,7 @@ the span, every later release is a duplicate. The fold order over all
 released rows equals the batch twin's global sort for ANY micro-batch
 split, so full-run == kill/resume == batch twin, row for row.
 
-Guarantee horizon: like dropDuplicatesWithinWatermark (run_dedup_job), a
+Guarantee horizon: like dropDuplicatesWithinWatermark (the dedup job), a
 duplicate arriving later than watermark + ttl after the owner's last
 activity re-admits — the state for a span hash purges once it can no
 longer change. Bounded state is non-negotiable on a 10^12-sequence

@@ -1,5 +1,6 @@
 import os
 import sys
+import time
 
 import pytest
 
@@ -10,6 +11,23 @@ from parallel_dataflow_spark.session import get_spark  # noqa: E402
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
+
+
+def canon(df):
+    """A frame's rows as a sorted list of tuples: order-free equality."""
+    return sorted(tuple(r) for r in df.collect())
+
+
+def stop_after_batch(q, n, timeout=120):
+    """Kill ``q`` mid-stream: stop it once it reports micro-batch ``n``,
+    or after ``timeout`` seconds."""
+    deadline = time.time() + timeout
+    while time.time() < deadline:
+        lp = q.lastProgress
+        if lp is not None and lp["batchId"] >= n:
+            break
+        time.sleep(0.2)
+    q.stop()
 
 
 @pytest.fixture(scope="session")

@@ -1,19 +1,14 @@
-"""run_bloom_gate_job (18th deployable): streaming Bloom contamination
+"""The bloomgate deployable (18th): streaming Bloom contamination
 gate. The calibrated filter is a BLOOM_WORDS-integer array literal in the
 plan, so flagging is scan-side and exactly deterministic — stream must
 equal the batch twin row for row, never miss a true contamination
 (one-sidedness), and survive kill/resume with different batching."""
 
-import time
-
 from pyspark.sql import functions as F
 
 from parallel_dataflow_spark.sources.sequences import write_sequence_table
-from parallel_dataflow_spark.streaming.jobs import (
-    batch_bloom_gate_golden,
-    calibrate_bloom_filter,
-    run_bloom_gate_job,
-)
+from parallel_dataflow_spark.streaming.jobs import calibrate_bloom_filter, golden, run
+from tests.conftest import stop_after_batch
 
 
 def canon(df):
@@ -31,14 +26,12 @@ def test_bloom_gate_matches_batch_and_resumes(spark, tmp_path):
     words = calibrate_bloom_filter(spark, src, bench_source="wiki")
     assert len(words) == 512 and any(w != 0 for w in words)
 
-    q, sink = run_bloom_gate_job(
-        spark, src, str(tmp_path / "full"), bloom_words=words
-    )
+    q, sink = run("bloomgate", spark, src, str(tmp_path / "full"), bloom_words=words)
     q.processAllAvailable()
     q.stop()
     got = canon(sink.read(spark))
 
-    want = canon(batch_bloom_gate_golden(spark, src, words))
+    want = canon(golden("bloomgate", spark, src, bloom_words=words))
     assert got == want
     flagged = sum(r[2] for r in want)
     clean = sum(r[3] for r in want)
@@ -61,19 +54,13 @@ def test_bloom_gate_matches_batch_and_resumes(spark, tmp_path):
     # deterministic scan-side expression, so the update-mode window agg
     # plus the latest-wins keyed sink replay to the identical table
     work = str(tmp_path / "resume")
-    q2, _ = run_bloom_gate_job(
-        spark, src, work, bloom_words=words, max_files_per_trigger=1
+    q2, _ = run(
+        "bloomgate", spark, src, work, bloom_words=words, max_files_per_trigger=1
     )
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 2:
-            break
-        time.sleep(0.2)
-    q2.stop()
+    stop_after_batch(q2, 2)
 
-    q3, sink3 = run_bloom_gate_job(
-        spark, src, work, bloom_words=words, max_files_per_trigger=1
+    q3, sink3 = run(
+        "bloomgate", spark, src, work, bloom_words=words, max_files_per_trigger=1
     )
     q3.processAllAvailable()
     q3.stop()

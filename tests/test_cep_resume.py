@@ -3,7 +3,6 @@ from checkpoint, final match set must equal the uninterrupted run (the
 north rule's resumability requirement for stateful operators)."""
 
 import contextlib
-import time
 
 import numpy as np
 import pandas as pd
@@ -11,6 +10,7 @@ import pandas as pd
 from parallel_dataflow_spark.sources.sequences import SEQUENCE_SCHEMA
 from parallel_dataflow_spark.streaming.cep import Pattern
 from parallel_dataflow_spark.streaming.jobs import run_cep_job
+from tests.conftest import stop_after_batch
 
 PATTERN = Pattern.of([[7], [8]], gap_seconds=600)
 BASE = np.datetime64("2026-01-01T00:00:00")
@@ -79,13 +79,7 @@ def kill_and_resume(spark, tmp_path, first_leg=contextlib.nullcontext()):
         q2, _ = run_cep_job(
             spark, src, work, PATTERN, watermark="1 minute", max_files_per_trigger=1
         )
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            lp = q2.lastProgress
-            if lp is not None and lp["batchId"] >= 3:
-                break
-            time.sleep(0.2)
-        q2.stop()  # kill mid-stream with NFA state in the store
+        stop_after_batch(q2, 3)  # kill mid-stream with NFA state in the store
 
     q3, sink3 = run_cep_job(
         spark, src, work, PATTERN, watermark="1 minute", max_files_per_trigger=1

@@ -1,4 +1,4 @@
-"""Streaming Count-Min job (run_cms_job): stream-vs-batch cell-table
+"""Streaming Count-Min job ("cms"): stream-vs-batch cell-table
 differential, probe estimates vs exact token counts (one-sided CMS
 guarantee), and the kill/resume exactly-once protocol.
 
@@ -8,8 +8,6 @@ latest-wins keyed sink converge to the exact batch cell table under any
 batching — verified by mft=4 vs mft=1-killed-and-resumed vs batch twin.
 """
 
-import time
-
 from pyspark.sql import functions as F
 
 from parallel_dataflow_spark.operators.sketches import CMS_WIDTH
@@ -17,15 +15,8 @@ from parallel_dataflow_spark.sources.sequences import (
     read_sequence_table,
     write_sequence_table,
 )
-from parallel_dataflow_spark.streaming.jobs import (
-    batch_cms_golden,
-    cms_report,
-    run_cms_job,
-)
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from parallel_dataflow_spark.streaming.jobs import cms_report, golden, run
+from tests.conftest import canon, stop_after_batch
 
 
 def _source(spark, tmp_path, n_rows=800, seed=37):
@@ -36,11 +27,11 @@ def _source(spark, tmp_path, n_rows=800, seed=37):
 
 def test_cms_stream_cells_match_batch(spark, tmp_path):
     src = _source(spark, tmp_path)
-    q, sink = run_cms_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("cms", spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     q.stop()
     got = canon(sink.read(spark))
-    want = canon(batch_cms_golden(spark, src))
+    want = canon(golden("cms", spark, src))
     assert len(got) > 0
     assert got == want
 
@@ -49,7 +40,7 @@ def test_cms_probe_estimates_one_sided(spark, tmp_path):
     """For every probed token and window: exact <= estimate <= exact +
     eps*N (eps = e/width), including a never-seen probe."""
     src = _source(spark, tmp_path, seed=41)
-    q, sink = run_cms_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("cms", spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     q.stop()
 
@@ -88,8 +79,8 @@ def test_cms_probe_estimates_one_sided(spark, tmp_path):
 
 def test_cms_job_exactly_once_resume(spark, tmp_path):
     src = _source(spark, tmp_path, seed=43)
-    q, sink_full = run_cms_job(
-        spark, src, str(tmp_path / "full"), max_files_per_trigger=4
+    q, sink_full = run(
+        "cms", spark, src, str(tmp_path / "full"), max_files_per_trigger=4
     )
     q.processAllAvailable()
     q.stop()
@@ -97,16 +88,10 @@ def test_cms_job_exactly_once_resume(spark, tmp_path):
     assert len(want) > 0
 
     work = str(tmp_path / "resumed")
-    q2, _ = run_cms_job(spark, src, work, max_files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
+    q2, _ = run("cms", spark, src, work, max_files_per_trigger=1)
+    stop_after_batch(q2, 3)  # kill mid-stream
 
-    q3, sink3 = run_cms_job(spark, src, work, max_files_per_trigger=1)
+    q3, sink3 = run("cms", spark, src, work, max_files_per_trigger=1)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want
@@ -124,7 +109,7 @@ def test_cms_stream_rocksdb_state_store(spark, tmp_path):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        q, sink = run_cms_job(spark, src, str(tmp_path / "rocks"))
+        q, sink = run("cms", spark, src, str(tmp_path / "rocks"))
         q.processAllAvailable()
         q.stop()
         got = canon(sink.read(spark))
@@ -133,7 +118,7 @@ def test_cms_stream_rocksdb_state_store(spark, tmp_path):
             spark.conf.set(key, old)
         else:
             spark.conf.unset(key)
-    assert got == canon(batch_cms_golden(spark, src))
+    assert got == canon(golden("cms", spark, src))
 
 
 def test_cms_rollup_matches_direct_coarse_sketch(spark, tmp_path):
@@ -144,10 +129,10 @@ def test_cms_rollup_matches_direct_coarse_sketch(spark, tmp_path):
     from parallel_dataflow_spark.streaming.jobs import cms_rollup
 
     src = _source(spark, tmp_path, n_rows=1200, seed=59)
-    q, sink = run_cms_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("cms", spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     q.stop()
     rolled = canon(cms_rollup(sink.read(spark), 3600))
-    direct = canon(batch_cms_golden(spark, src, window="60 minutes"))
+    direct = canon(golden("cms", spark, src, window="60 minutes"))
     assert len(rolled) > 0
     assert rolled == direct

@@ -3,7 +3,6 @@ with genuine duplicates (the table written twice), plus the kill/resume
 exactly-once protocol shared with the other deployable jobs."""
 
 import shutil
-import time
 
 from pyspark.sql import functions as F
 
@@ -11,11 +10,8 @@ from parallel_dataflow_spark.sources.sequences import (
     read_sequence_table,
     write_sequence_table,
 )
-from parallel_dataflow_spark.streaming.jobs import run_dedup_job
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from parallel_dataflow_spark.streaming.jobs import run
+from tests.conftest import canon, stop_after_batch
 
 
 def _dup_source(spark, tmp_path, n_rows=1500, seed=11):
@@ -38,7 +34,7 @@ def _batch_golden(spark, src):
 
 def test_dedup_stream_matches_batch_distinct(spark, tmp_path):
     src = _dup_source(spark, tmp_path)
-    q, sink = run_dedup_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("dedup", spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     q.stop()
     got = canon(sink.read(spark))
@@ -52,8 +48,8 @@ def test_dedup_stream_matches_batch_distinct(spark, tmp_path):
 
 def test_dedup_job_exactly_once_resume(spark, tmp_path):
     src = _dup_source(spark, tmp_path, seed=13)
-    q, sink_full = run_dedup_job(
-        spark, src, str(tmp_path / "full"), max_files_per_trigger=1
+    q, sink_full = run(
+        "dedup", spark, src, str(tmp_path / "full"), max_files_per_trigger=1
     )
     q.processAllAvailable()
     q.stop()
@@ -61,16 +57,10 @@ def test_dedup_job_exactly_once_resume(spark, tmp_path):
     assert len(want) > 0
 
     work = str(tmp_path / "resumed")
-    q2, _ = run_dedup_job(spark, src, work, max_files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
+    q2, _ = run("dedup", spark, src, work, max_files_per_trigger=1)
+    stop_after_batch(q2, 3)  # kill mid-stream
 
-    q3, sink3 = run_dedup_job(spark, src, work, max_files_per_trigger=1)
+    q3, sink3 = run("dedup", spark, src, work, max_files_per_trigger=1)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want
@@ -88,7 +78,7 @@ def test_dedup_stream_rocksdb_state_store(spark, tmp_path):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        q, sink = run_dedup_job(spark, src, str(tmp_path / "rocks"))
+        q, sink = run("dedup", spark, src, str(tmp_path / "rocks"))
         q.processAllAvailable()
         q.stop()
         got = canon(sink.read(spark))

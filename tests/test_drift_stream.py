@@ -1,4 +1,4 @@
-"""Streaming drift monitor (run_drift_job): stream-vs-batch differential
+"""Streaming drift monitor ("drift"): stream-vs-batch differential
 on the published histogram table, exactly-once kill/resume, and a numpy
 third opinion on drift_report's JS values."""
 
@@ -8,15 +8,8 @@ from parallel_dataflow_spark.sources.sequences import (
     read_sequence_table,
     write_sequence_table,
 )
-from parallel_dataflow_spark.streaming.jobs import (
-    batch_drift_golden,
-    drift_report,
-    run_drift_job,
-)
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from parallel_dataflow_spark.streaming.jobs import drift_report, golden, run
+from tests.conftest import canon, stop_after_batch
 
 
 def test_drift_stream_matches_batch_and_resumes(spark, tmp_path):
@@ -24,29 +17,21 @@ def test_drift_stream_matches_batch_and_resumes(spark, tmp_path):
     write_sequence_table(spark, src, 2000, seed=11, n_files=8, rows_per_sec=2)
 
     # uninterrupted run
-    q, sink = run_drift_job(spark, src, str(tmp_path / "full"))
+    q, sink = run("drift", spark, src, str(tmp_path / "full"))
     q.processAllAvailable()
     q.stop()
     got = canon(sink.read(spark))
 
-    want = canon(batch_drift_golden(spark, src))
+    want = canon(golden("drift", spark, src))
     assert got == want
     assert got, "histogram table must be non-empty"
 
     # kill mid-stream, resume from checkpoint — exactly-once
-    import time
-
     work = str(tmp_path / "resume")
-    q2, _ = run_drift_job(spark, src, work, max_files_per_trigger=2)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 2:
-            break
-        time.sleep(0.2)
-    q2.stop()
+    q2, _ = run("drift", spark, src, work, max_files_per_trigger=2)
+    stop_after_batch(q2, 2)
 
-    q3, sink3 = run_drift_job(spark, src, work, max_files_per_trigger=2)
+    q3, sink3 = run("drift", spark, src, work, max_files_per_trigger=2)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want
@@ -56,7 +41,7 @@ def test_drift_report_matches_numpy(spark, tmp_path):
     src = str(tmp_path / "src")
     write_sequence_table(spark, src, 1500, seed=12, n_files=4, rows_per_sec=2)
 
-    hist = batch_drift_golden(spark, src, n_buckets=32)
+    hist = golden("drift", spark, src, n_buckets=32)
     got = {
         (r["source"], r["window_start"]): (r["n_tokens"], r["js_div"])
         for r in drift_report(hist).collect()

@@ -1,16 +1,11 @@
-"""run_dsir_gate_job (15th deployable): streaming DSIR admission gate.
+"""The dsirgate deployable (15th): streaming DSIR admission gate.
 The calibrated micro-nat model is an array literal in the plan, so
 admission is scan-side and exactly integer — stream must equal the batch
 twin row for row, and survive kill/resume with different batching."""
 
-import time
-
 from parallel_dataflow_spark.sources.sequences import write_sequence_table
-from parallel_dataflow_spark.streaming.jobs import (
-    batch_dsir_gate_golden,
-    calibrate_dsir_lr,
-    run_dsir_gate_job,
-)
+from parallel_dataflow_spark.streaming.jobs import calibrate_dsir_lr, golden, run
+from tests.conftest import stop_after_batch
 
 
 def canon(df):
@@ -29,12 +24,12 @@ def test_dsir_gate_matches_batch_and_resumes(spark, tmp_path):
     lr = calibrate_dsir_lr(spark, src, target_source="wiki", buckets=1024)
     assert len(lr) == 1024 and any(v != 0 for v in lr)
 
-    q, sink = run_dsir_gate_job(spark, src, str(tmp_path / "full"), lr_micro=lr)
+    q, sink = run("dsirgate", spark, src, str(tmp_path / "full"), lr_micro=lr)
     q.processAllAvailable()
     q.stop()
     got = canon(sink.read(spark))
 
-    want = canon(batch_dsir_gate_golden(spark, src, lr))
+    want = canon(golden("dsirgate", spark, src, lr_micro=lr))
     assert got == want
     adm = sum(r[2] for r in want)
     rej = sum(r[3] for r in want)
@@ -44,20 +39,10 @@ def test_dsir_gate_matches_batch_and_resumes(spark, tmp_path):
     # is a deterministic scan-side expression, so the update-mode window
     # agg plus the latest-wins keyed sink replay to the identical table
     work = str(tmp_path / "resume")
-    q2, _ = run_dsir_gate_job(
-        spark, src, work, lr_micro=lr, max_files_per_trigger=1
-    )
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 2:
-            break
-        time.sleep(0.2)
-    q2.stop()
+    q2, _ = run("dsirgate", spark, src, work, lr_micro=lr, max_files_per_trigger=1)
+    stop_after_batch(q2, 2)
 
-    q3, sink3 = run_dsir_gate_job(
-        spark, src, work, lr_micro=lr, max_files_per_trigger=1
-    )
+    q3, sink3 = run("dsirgate", spark, src, work, lr_micro=lr, max_files_per_trigger=1)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want

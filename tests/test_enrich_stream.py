@@ -1,24 +1,19 @@
-"""Stream-static enrichment job (run_enrich_job): broadcast dim join on
+"""Stream-static enrichment job ("enrich"): broadcast dim join on
 the stream — stream==batch differential, kill/resume exactly-once, a
 plan gate pinning the BroadcastHashJoin (a shuffled stream-static join
 would be the classic self-inflicted bottleneck), and the
 unlisted-source tier-0 fallback."""
-
-import time
 
 from pyspark.sql import functions as F
 
 from parallel_dataflow_spark.sources.sequences import write_sequence_table
 from parallel_dataflow_spark.streaming.jobs import (
     _enrich_agg,
-    batch_enrich_golden,
     calibrate_source_tiers,
-    run_enrich_job,
+    golden,
+    run,
 )
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.conftest import canon, stop_after_batch
 
 
 def _source(spark, tmp_path, n_rows=800, seed=113):
@@ -31,11 +26,11 @@ def test_enrich_stream_matches_batch(spark, tmp_path):
     src = _source(spark, tmp_path)
     tiers = calibrate_source_tiers(spark, src)
     assert len(tiers) > 0 and {t for _, t in tiers} <= {1, 2, 3}
-    q, sink = run_enrich_job(spark, src, str(tmp_path / "work"), tiers=tiers)
+    q, sink = run("enrich", spark, src, str(tmp_path / "work"), tiers=tiers)
     q.processAllAvailable()
     q.stop()
     got = canon(sink.read(spark))
-    want = canon(batch_enrich_golden(spark, src, tiers))
+    want = canon(golden("enrich", spark, src, tiers=tiers))
     assert len(got) > 0
     assert got == want
 
@@ -50,7 +45,7 @@ def test_enrich_join_is_broadcast_and_keeps_unlisted_sources(spark, tmp_path):
     dropped_source = tiers[0][0]
     partial = [t for t in tiers if t[0] != dropped_source]
     dim = spark.createDataFrame(partial, "source string, tier int")
-    out = _enrich_agg(table, dim, "10 minutes", None)
+    out = _enrich_agg(table, dim, "10 minutes", "5 minutes")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     rows = out.collect()
@@ -62,8 +57,8 @@ def test_enrich_join_is_broadcast_and_keeps_unlisted_sources(spark, tmp_path):
 def test_enrich_exactly_once_resume(spark, tmp_path):
     src = _source(spark, tmp_path, seed=131)
     tiers = calibrate_source_tiers(spark, src)
-    q, sink_full = run_enrich_job(
-        spark, src, str(tmp_path / "full"), tiers=tiers, max_files_per_trigger=4
+    q, sink_full = run(
+        "enrich", spark, src, str(tmp_path / "full"), tiers=tiers, max_files_per_trigger=4
     )
     q.processAllAvailable()
     q.stop()
@@ -71,16 +66,10 @@ def test_enrich_exactly_once_resume(spark, tmp_path):
     assert len(want) > 0
 
     work = str(tmp_path / "resumed")
-    q2, _ = run_enrich_job(spark, src, work, tiers=tiers, max_files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
+    q2, _ = run("enrich", spark, src, work, tiers=tiers, max_files_per_trigger=1)
+    stop_after_batch(q2, 3)  # kill mid-stream
 
-    q3, sink3 = run_enrich_job(spark, src, work, tiers=tiers, max_files_per_trigger=1)
+    q3, sink3 = run("enrich", spark, src, work, tiers=tiers, max_files_per_trigger=1)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want

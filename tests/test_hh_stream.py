@@ -1,4 +1,4 @@
-"""run_hh_job (20th deployable): calibrated heavy-hitter tracking over a
+"""The hhtrack deployable (20th): calibrated heavy-hitter tracking over a
 PLANTED-skew sequence table (the fixture generator's tokens are uniform —
 no bigram is heavy there — so the tests construct a corpus where '7_8' is
 in every doc and '5_6'/'8_5' in every third): stream-vs-batch count
@@ -7,25 +7,21 @@ groupBy truth, and share reporting from the sink.
 """
 
 import datetime as dt
-import time
 
 from pyspark.sql import functions as F
 
 from parallel_dataflow_spark.sources.sequences import read_sequence_table
 from parallel_dataflow_spark.streaming.jobs import (
-    _token_bigrams,
-    batch_hh_golden,
     calibrate_hh_candidates,
+    golden,
     hh_report,
-    run_hh_job,
+    run,
+    _token_bigrams,
 )
+from tests.conftest import canon, stop_after_batch
 
 THETA = 0.005
 BASE = dt.datetime(2026, 1, 1, 0, 0, 0)
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
 
 
 def _source(spark, tmp_path, n_rows=600):
@@ -89,12 +85,12 @@ def test_hh_candidates_bounded_and_planted_found(spark, tmp_path):
 
 def test_hh_stream_matches_batch(spark, tmp_path):
     src = _source(spark, tmp_path)
-    q, sink = run_hh_job(spark, src, str(tmp_path / "work"), theta=THETA)
+    q, sink = run("hhtrack", spark, src, str(tmp_path / "work"), theta=THETA)
     q.processAllAvailable()
     q.stop()
     cands = calibrate_hh_candidates(spark, src, theta=THETA)
     got = canon(sink.read(spark).select("window_start", "key", "cnt"))
-    want = canon(batch_hh_golden(spark, src, cands))
+    want = canon(golden("hhtrack", spark, src, candidates=cands))
     assert len(got) > 0
     assert got == want
 
@@ -103,7 +99,7 @@ def test_hh_tracked_counts_and_shares_exact(spark, tmp_path):
     """Sink counts for every tracked key equal a direct exact groupBy of
     the raw bigram stream, and hh_report shares equal cnt/total."""
     src = _source(spark, tmp_path)
-    q, sink = run_hh_job(spark, src, str(tmp_path / "work"), theta=THETA)
+    q, sink = run("hhtrack", spark, src, str(tmp_path / "work"), theta=THETA)
     q.processAllAvailable()
     q.stop()
     rows = sink.read(spark)
@@ -140,8 +136,8 @@ def test_hh_tracked_counts_and_shares_exact(spark, tmp_path):
 def test_hh_job_exactly_once_resume(spark, tmp_path):
     src = _source(spark, tmp_path)
     cands = calibrate_hh_candidates(spark, src, theta=THETA)
-    q, sink_full = run_hh_job(
-        spark, src, str(tmp_path / "full"), candidates=cands,
+    q, sink_full = run(
+        "hhtrack", spark, src, str(tmp_path / "full"), candidates=cands,
         max_files_per_trigger=4,
     )
     q.processAllAvailable()
@@ -150,19 +146,13 @@ def test_hh_job_exactly_once_resume(spark, tmp_path):
     assert len(want) > 0
 
     work = str(tmp_path / "resumed")
-    q2, _ = run_hh_job(
-        spark, src, work, candidates=cands, max_files_per_trigger=1
+    q2, _ = run(
+        "hhtrack", spark, src, work, candidates=cands, max_files_per_trigger=1
     )
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
+    stop_after_batch(q2, 3)  # kill mid-stream
 
-    q3, sink3 = run_hh_job(
-        spark, src, work, candidates=cands, max_files_per_trigger=1
+    q3, sink3 = run(
+        "hhtrack", spark, src, work, candidates=cands, max_files_per_trigger=1
     )
     q3.processAllAvailable()
     q3.stop()

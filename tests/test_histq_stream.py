@@ -1,4 +1,4 @@
-"""Streaming histogram-quantile job (run_histq_job): stream-vs-batch
+"""Streaming histogram-quantile job ("histq"): stream-vs-batch
 cell-table differential, quantile-estimate accuracy vs the exact
 per-window order statistic (lower-edge one-sided bound), kill/resume
 exactly-once, and the additive rollup law.
@@ -10,7 +10,6 @@ latest-wins keyed sink converges to the batch twin under any batching.
 """
 
 import math
-import time
 
 from pyspark.sql import functions as F
 
@@ -20,16 +19,13 @@ from parallel_dataflow_spark.sources.sequences import (
     write_sequence_table,
 )
 from parallel_dataflow_spark.streaming.jobs import (
-    batch_histq_golden,
     calibrate_hist_grid,
+    golden,
     histq_report,
     histq_rollup,
-    run_histq_job,
+    run,
 )
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.conftest import canon, stop_after_batch
 
 
 def _source(spark, tmp_path, n_rows=800, seed=61):
@@ -41,11 +37,11 @@ def _source(spark, tmp_path, n_rows=800, seed=61):
 def test_histq_stream_cells_match_batch(spark, tmp_path):
     src = _source(spark, tmp_path)
     grid = calibrate_hist_grid(spark, src)
-    q, sink = run_histq_job(spark, src, str(tmp_path / "work"), grid=grid)
+    q, sink = run("histq", spark, src, str(tmp_path / "work"), grid=grid)
     q.processAllAvailable()
     q.stop()
     got = canon(sink.read(spark))
-    want = canon(batch_histq_golden(spark, src, grid))
+    want = canon(golden("histq", spark, src, grid=grid))
     assert len(got) > 0
     assert got == want
 
@@ -58,7 +54,7 @@ def test_histq_report_brackets_exact_order_statistic(spark, tmp_path):
     bucket, whose upper edge is closed)."""
     src = _source(spark, tmp_path, seed=67)
     grid = calibrate_hist_grid(spark, src)
-    q, sink = run_histq_job(spark, src, str(tmp_path / "work"), grid=grid)
+    q, sink = run("histq", spark, src, str(tmp_path / "work"), grid=grid)
     q.processAllAvailable()
     q.stop()
 
@@ -93,8 +89,8 @@ def test_histq_report_brackets_exact_order_statistic(spark, tmp_path):
 def test_histq_job_exactly_once_resume(spark, tmp_path):
     src = _source(spark, tmp_path, seed=71)
     grid = calibrate_hist_grid(spark, src)
-    q, sink_full = run_histq_job(
-        spark, src, str(tmp_path / "full"), grid=grid, max_files_per_trigger=4
+    q, sink_full = run(
+        "histq", spark, src, str(tmp_path / "full"), grid=grid, max_files_per_trigger=4
     )
     q.processAllAvailable()
     q.stop()
@@ -102,16 +98,10 @@ def test_histq_job_exactly_once_resume(spark, tmp_path):
     assert len(want) > 0
 
     work = str(tmp_path / "resumed")
-    q2, _ = run_histq_job(spark, src, work, grid=grid, max_files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
+    q2, _ = run("histq", spark, src, work, grid=grid, max_files_per_trigger=1)
+    stop_after_batch(q2, 3)  # kill mid-stream
 
-    q3, sink3 = run_histq_job(spark, src, work, grid=grid, max_files_per_trigger=1)
+    q3, sink3 = run("histq", spark, src, work, grid=grid, max_files_per_trigger=1)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want
@@ -123,10 +113,10 @@ def test_histq_rollup_matches_direct_coarse_histogram(spark, tmp_path):
     window-independent, so histogram cells are additive across grains."""
     src = _source(spark, tmp_path, n_rows=1200, seed=73)
     grid = calibrate_hist_grid(spark, src)
-    q, sink = run_histq_job(spark, src, str(tmp_path / "work"), grid=grid)
+    q, sink = run("histq", spark, src, str(tmp_path / "work"), grid=grid)
     q.processAllAvailable()
     q.stop()
     rolled = canon(histq_rollup(sink.read(spark), 3600))
-    direct = canon(batch_histq_golden(spark, src, grid, window="60 minutes"))
+    direct = canon(golden("histq", spark, src, grid=grid, window="60 minutes"))
     assert len(rolled) > 0
     assert rolled == direct

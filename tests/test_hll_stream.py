@@ -1,4 +1,4 @@
-"""Streaming HLL cardinality job (run_hll_job): stream-vs-batch register
+"""Streaming HLL cardinality job ("hll"): stream-vs-batch register
 differential, estimate-vs-exact error bound, and the kill/resume
 exactly-once protocol shared with the other deployables.
 
@@ -9,23 +9,14 @@ table under any batching — verified by mft=4 vs mft=1-killed-and-resumed
 vs batch twin.
 """
 
-import time
-
 from pyspark.sql import functions as F
 
 from parallel_dataflow_spark.sources.sequences import (
     read_sequence_table,
     write_sequence_table,
 )
-from parallel_dataflow_spark.streaming.jobs import (
-    batch_hll_golden,
-    hll_report,
-    run_hll_job,
-)
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from parallel_dataflow_spark.streaming.jobs import golden, hll_report, run
+from tests.conftest import canon, stop_after_batch
 
 
 def _source(spark, tmp_path, n_rows=2000, seed=23):
@@ -36,11 +27,11 @@ def _source(spark, tmp_path, n_rows=2000, seed=23):
 
 def test_hll_stream_registers_match_batch(spark, tmp_path):
     src = _source(spark, tmp_path)
-    q, sink = run_hll_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("hll", spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     q.stop()
     got = canon(sink.read(spark))
-    want = canon(batch_hll_golden(spark, src))
+    want = canon(golden("hll", spark, src))
     assert len(got) > 0
     assert got == want
 
@@ -50,7 +41,7 @@ def test_hll_stream_estimate_within_bound(spark, tmp_path):
     doc_id counts within the HLL error law (4 sigma of 1.04/sqrt(4096),
     floor of 1 for tiny windows in the linear-counting regime)."""
     src = _source(spark, tmp_path, n_rows=3000, seed=29)
-    q, sink = run_hll_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("hll", spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     q.stop()
     est = {
@@ -76,8 +67,8 @@ def test_hll_stream_estimate_within_bound(spark, tmp_path):
 
 def test_hll_job_exactly_once_resume(spark, tmp_path):
     src = _source(spark, tmp_path, seed=31)
-    q, sink_full = run_hll_job(
-        spark, src, str(tmp_path / "full"), max_files_per_trigger=4
+    q, sink_full = run(
+        "hll", spark, src, str(tmp_path / "full"), max_files_per_trigger=4
     )
     q.processAllAvailable()
     q.stop()
@@ -85,16 +76,10 @@ def test_hll_job_exactly_once_resume(spark, tmp_path):
     assert len(want) > 0
 
     work = str(tmp_path / "resumed")
-    q2, _ = run_hll_job(spark, src, work, max_files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
+    q2, _ = run("hll", spark, src, work, max_files_per_trigger=1)
+    stop_after_batch(q2, 3)  # kill mid-stream
 
-    q3, sink3 = run_hll_job(spark, src, work, max_files_per_trigger=1)
+    q3, sink3 = run("hll", spark, src, work, max_files_per_trigger=1)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want
@@ -109,11 +94,11 @@ def test_hll_rollup_matches_direct_coarse_sketch(spark, tmp_path):
     from parallel_dataflow_spark.streaming.jobs import hll_rollup
 
     src = _source(spark, tmp_path, n_rows=2500, seed=53)
-    q, sink = run_hll_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("hll", spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     q.stop()
     rolled = canon(hll_rollup(sink.read(spark), 3600))
-    direct = canon(batch_hll_golden(spark, src, window="60 minutes"))
+    direct = canon(golden("hll", spark, src, window="60 minutes"))
     assert len(rolled) > 0
     assert rolled == direct
     # and the hourly estimates are still within the HLL error law

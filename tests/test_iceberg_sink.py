@@ -120,3 +120,18 @@ def test_iceberg_end_to_end(spark, tmp_path):
     sink.write_batch(b2, 1)  # upsert
     got = {r["doc_id"]: r["n_seqs"] for r in sink.read(spark).collect()}
     assert got == {"d1": 5, "d2": 2}
+
+
+def test_run_without_runtime_fails_by_name(spark, tmp_path):
+    """A deployable asked for an Iceberg sink on a session without the
+    runtime raises, naming the table, instead of writing parquet epochs
+    under ``<work_dir>/sink``."""
+    from parallel_dataflow_spark.streaming.jobs import IcebergUnavailable, run
+
+    work = tmp_path / "work"
+    with pytest.raises(IcebergUnavailable, match="lake.db.t"):
+        run(
+            "tumbling", spark, str(tmp_path / "src"), str(work),
+            iceberg_table="lake.db.t",
+        )
+    assert not work.exists()

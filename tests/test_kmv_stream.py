@@ -1,4 +1,4 @@
-"""run_kmv_job (19th deployable): stream-vs-batch sketch differential,
+"""The kmv deployable (19th): stream-vs-batch sketch differential,
 kill/resume exactly-once, per-window Jaccard report vs exact truth.
 
 The order-invariance argument under test: bottom-K of a set is the same
@@ -7,8 +7,6 @@ keyed sink converge to the exact batch twin — the additive-running-totals
 argument (CMS) applied to an order-statistics sketch.
 """
 
-import time
-
 from pyspark.sql import functions as F
 
 from parallel_dataflow_spark.operators.sketches import KMV_K
@@ -16,11 +14,12 @@ from parallel_dataflow_spark.sources.sequences import (
     read_sequence_table,
     write_sequence_table,
 )
-from parallel_dataflow_spark.streaming.jobs import batch_kmv_golden, run_kmv_job
+from parallel_dataflow_spark.streaming.jobs import run
 from parallel_dataflow_spark.streaming.kmvstream import (
     kmv_window_batch,
     kmv_window_report,
 )
+from tests.conftest import stop_after_batch
 
 
 def canon(df):
@@ -38,11 +37,11 @@ def _source(spark, tmp_path, n_rows=600, seed=61):
 
 def test_kmv_stream_matches_batch(spark, tmp_path):
     src = _source(spark, tmp_path)
-    q, sink = run_kmv_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("kmv", spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     q.stop()
     got = canon(sink.read(spark))
-    want = canon(batch_kmv_golden(spark, src))
+    want = canon(kmv_window_batch(read_sequence_table(spark, src)))
     assert len(got) > 0
     assert got == want
     assert all(len(hs) <= KMV_K for _, _, hs, _ in got)
@@ -50,8 +49,8 @@ def test_kmv_stream_matches_batch(spark, tmp_path):
 
 def test_kmv_job_exactly_once_resume(spark, tmp_path):
     src = _source(spark, tmp_path, seed=67)
-    q, sink_full = run_kmv_job(
-        spark, src, str(tmp_path / "full"), max_files_per_trigger=4
+    q, sink_full = run(
+        "kmv", spark, src, str(tmp_path / "full"), max_files_per_trigger=4
     )
     q.processAllAvailable()
     q.stop()
@@ -59,16 +58,10 @@ def test_kmv_job_exactly_once_resume(spark, tmp_path):
     assert len(want) > 0
 
     work = str(tmp_path / "resumed")
-    q2, _ = run_kmv_job(spark, src, work, max_files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
+    q2, _ = run("kmv", spark, src, work, max_files_per_trigger=1)
+    stop_after_batch(q2, 3)  # kill mid-stream
 
-    q3, sink3 = run_kmv_job(spark, src, work, max_files_per_trigger=1)
+    q3, sink3 = run("kmv", spark, src, work, max_files_per_trigger=1)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want
@@ -79,7 +72,7 @@ def test_kmv_window_report_estimates_true_jaccard(spark, tmp_path):
     within the unioned-sketch bound 4*sqrt(J(1-J)/K) (+1/K for the
     rounding floor when J is tiny) of the exact per-window truth."""
     src = _source(spark, tmp_path, n_rows=1200, seed=71)
-    q, sink = run_kmv_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("kmv", spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     q.stop()
 
@@ -153,7 +146,7 @@ def test_kmv_rollup_matches_direct_coarse_sketch(spark, tmp_path):
     from parallel_dataflow_spark.streaming.kmvstream import kmv_rollup
 
     src = _source(spark, tmp_path, n_rows=1200, seed=101)
-    q, sink = run_kmv_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("kmv", spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     q.stop()
     rolled = canon(kmv_rollup(sink.read(spark), 3600))

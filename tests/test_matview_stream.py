@@ -4,18 +4,9 @@ to exactly what an on-demand hll_report over the final registers gives
 (and therefore to the batch twin), under full-run AND kill/resume.
 """
 
-import time
-
 from parallel_dataflow_spark.sources.sequences import write_sequence_table
-from parallel_dataflow_spark.streaming.jobs import (
-    batch_hll_golden,
-    hll_report,
-    run_matview_job,
-)
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from parallel_dataflow_spark.streaming.jobs import golden, hll_report, run_matview_job
+from tests.conftest import canon, stop_after_batch
 
 
 def _source(spark, tmp_path, n_rows=800, seed=101):
@@ -29,8 +20,8 @@ def test_matview_estimates_converge_to_batch(spark, tmp_path):
     q, reg_sink, est_sink = run_matview_job(spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     q.stop()
-    # register sink == batch twin (the run_hll_job contract, unchanged)
-    assert canon(reg_sink.read(spark)) == canon(batch_hll_golden(spark, src))
+    # register sink == batch twin (the hll job's contract, unchanged)
+    assert canon(reg_sink.read(spark)) == canon(golden("hll", spark, src))
     # derived view == on-demand report over the final registers
     got = canon(est_sink.read(spark))
     want = canon(hll_report(reg_sink.read(spark)))
@@ -50,13 +41,7 @@ def test_matview_exactly_once_resume(spark, tmp_path):
 
     work = str(tmp_path / "resumed")
     q2, _, _ = run_matview_job(spark, src, work, max_files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream (possibly between the two sink writes)
+    stop_after_batch(q2, 3)  # kill mid-stream (possibly between the two sink writes)
 
     q3, _, est3 = run_matview_job(spark, src, work, max_files_per_trigger=1)
     q3.processAllAvailable()

@@ -1,22 +1,13 @@
-"""Streaming mixture resampler (run_mix_job): stream-vs-batch
+"""Streaming mixture resampler ("mix"): stream-vs-batch
 differential on the kept-volume table, exactly-once kill/resume, and a
 pure-Python third opinion on the calibration math."""
-
-import time
 
 from parallel_dataflow_spark.sources.sequences import (
     read_sequence_table,
     write_sequence_table,
 )
-from parallel_dataflow_spark.streaming.jobs import (
-    batch_mix_golden,
-    calibrate_mix_rates,
-    run_mix_job,
-)
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from parallel_dataflow_spark.streaming.jobs import calibrate_mix_rates, golden, run
+from tests.conftest import canon, stop_after_batch
 
 
 def test_mix_stream_matches_batch_and_resumes(spark, tmp_path):
@@ -25,12 +16,12 @@ def test_mix_stream_matches_batch_and_resumes(spark, tmp_path):
 
     rates = calibrate_mix_rates(spark, src)
 
-    q, sink = run_mix_job(spark, src, str(tmp_path / "full"), rates=rates)
+    q, sink = run("mix", spark, src, str(tmp_path / "full"), rates=rates)
     q.processAllAvailable()
     q.stop()
     got = canon(sink.read(spark))
 
-    want = canon(batch_mix_golden(spark, src, rates))
+    want = canon(golden("mix", spark, src, rates=rates))
     assert got == want
     assert got, "kept-volume table must be non-empty"
     # the filter actually thins: kept docs < input docs
@@ -39,16 +30,10 @@ def test_mix_stream_matches_batch_and_resumes(spark, tmp_path):
 
     # kill mid-stream, resume from checkpoint — exactly-once
     work = str(tmp_path / "resume")
-    q2, _ = run_mix_job(spark, src, work, rates=rates, max_files_per_trigger=2)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 2:
-            break
-        time.sleep(0.2)
-    q2.stop()
+    q2, _ = run("mix", spark, src, work, rates=rates, max_files_per_trigger=2)
+    stop_after_batch(q2, 2)
 
-    q3, sink3 = run_mix_job(spark, src, work, rates=rates, max_files_per_trigger=2)
+    q3, sink3 = run("mix", spark, src, work, rates=rates, max_files_per_trigger=2)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want

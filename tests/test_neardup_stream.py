@@ -11,7 +11,6 @@ they MUST be flagged; originals arrive first and must not be."""
 import glob
 import json
 import os
-import time
 
 from pyspark.sql import functions as F
 
@@ -21,6 +20,7 @@ from parallel_dataflow_spark.sources.sequences import (
 )
 from parallel_dataflow_spark.streaming.jobs import run_neardup_job
 from parallel_dataflow_spark.streaming.neardup import neardup_prestage
+from tests.conftest import stop_after_batch
 
 THRESHOLD = 0.7
 
@@ -164,13 +164,7 @@ def test_neardup_job_exactly_once_resume(spark, tmp_path):
 
     work = str(tmp_path / "resumed")
     q2, _ = run_neardup_job(spark, src, work, max_files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 2:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
+    stop_after_batch(q2, 2)  # kill mid-stream
 
     q3, sink3 = run_neardup_job(spark, src, work, max_files_per_trigger=1)
     q3.processAllAvailable()

@@ -1,4 +1,4 @@
-"""Left-outer stream-stream join (run_outer_join_job): the watermark-
+"""Left-outer stream-stream join ("outerjoin"): the watermark-
 expiry emission path. Unmatched raw-feed rows must emit null-padded
 (-1 sentinels) once the watermark proves no re-tokenized twin can still
 arrive — verified row-for-row against the identical batch plan, plus
@@ -14,14 +14,8 @@ from parallel_dataflow_spark.sources.sequences import (
     read_sequence_table,
     write_sequence_table,
 )
-from parallel_dataflow_spark.streaming.jobs import (
-    batch_outer_join_golden,
-    run_outer_join_job,
-)
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from parallel_dataflow_spark.streaming.jobs import golden, run
+from tests.conftest import canon, stop_after_batch
 
 
 def _flush_doc_id(spark) -> str:
@@ -92,10 +86,10 @@ def _drain(spark, q, sink, settle_s=30):
 
 def test_outer_join_stream_matches_batch(spark, tmp_path):
     src = _source_with_flush(spark, tmp_path)
-    q, sink = run_outer_join_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("outerjoin", spark, src, str(tmp_path / "work"))
     _drain(spark, q, sink)
     got = canon(sink.read(spark))
-    want = canon(batch_outer_join_golden(spark, src))
+    want = canon(golden("outerjoin", spark, src))
     assert len(got) > 0
     assert got == want
 
@@ -105,7 +99,7 @@ def test_outer_join_unmatched_are_exactly_the_hash_holdout(spark, tmp_path):
     null-padded rows, and every other doc_id only as matched rows (the
     self-join guarantees a same-timestamp twin for kept ids)."""
     src = _source_with_flush(spark, tmp_path, seed=89)
-    q, sink = run_outer_join_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("outerjoin", spark, src, str(tmp_path / "work"))
     _drain(spark, q, sink)
     rows = sink.read(spark)
     bad = rows.withColumn(
@@ -128,23 +122,17 @@ def test_outer_join_unmatched_are_exactly_the_hash_holdout(spark, tmp_path):
 
 def test_outer_join_exactly_once_resume(spark, tmp_path):
     src = _source_with_flush(spark, tmp_path, seed=97)
-    q, sink_full = run_outer_join_job(
-        spark, src, str(tmp_path / "full"), max_files_per_trigger=4
+    q, sink_full = run(
+        "outerjoin", spark, src, str(tmp_path / "full"), max_files_per_trigger=4
     )
     _drain(spark, q, sink_full)
     want = canon(sink_full.read(spark))
     assert len(want) > 0
 
     work = str(tmp_path / "resumed")
-    q2, _ = run_outer_join_job(spark, src, work, max_files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
+    q2, _ = run("outerjoin", spark, src, work, max_files_per_trigger=1)
+    stop_after_batch(q2, 3)  # kill mid-stream
 
-    q3, sink3 = run_outer_join_job(spark, src, work, max_files_per_trigger=1)
+    q3, sink3 = run("outerjoin", spark, src, work, max_files_per_trigger=1)
     _drain(spark, q3, sink3)
     assert canon(sink3.read(spark)) == want

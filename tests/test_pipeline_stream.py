@@ -1,4 +1,4 @@
-"""run_pipeline_job: the composed ingestion pipeline (gate → streaming
+"""The pipeline deployable: the composed ingestion pipeline (gate → streaming
 dedup → windowed admission stats → exactly-once sink) vs its batch twin.
 
 Append mode (two chained stateful operators) only emits a window once
@@ -7,28 +7,21 @@ writes a far-future SENTINEL row to advance the watermark and flush
 every pending window — mirroring how a production run's window tail
 drains as the stream keeps flowing. The sentinel must PASS the quality
 gate (Catalyst pushes the gate below the EventTimeWatermark node, so a
-gated-out row would never advance event time — see run_pipeline_job's
+gated-out row would never advance event time — see the pipeline plan's
 docstring); it carries source="__sentinel__", its own window never
 closes (watermark = its ts - delay), and the batch golden excludes that
 source."""
 
 import datetime
 import shutil
-import time
 
 from parallel_dataflow_spark.sources.sequences import (
     SEQUENCE_SCHEMA,
     read_sequence_table,
     write_sequence_table,
 )
-from parallel_dataflow_spark.streaming.jobs import (
-    batch_pipeline_golden,
-    run_pipeline_job,
-)
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from parallel_dataflow_spark.streaming.jobs import batch_pipeline_golden, run
+from tests.conftest import canon, stop_after_batch
 
 
 def _dup_source(spark, tmp_path, n_rows=1500, seed=31):
@@ -51,7 +44,7 @@ def _flush_sentinel(spark, src):
 
 def test_pipeline_stream_matches_batch(spark, tmp_path):
     src = _dup_source(spark, tmp_path)
-    q, sink = run_pipeline_job(spark, src, str(tmp_path / "work"))
+    q, sink = run("pipeline", spark, src, str(tmp_path / "work"))
     q.processAllAvailable()
     _flush_sentinel(spark, src)
     q.processAllAvailable()
@@ -70,8 +63,8 @@ def test_pipeline_stream_matches_batch(spark, tmp_path):
 
 def test_pipeline_job_exactly_once_resume(spark, tmp_path):
     src = _dup_source(spark, tmp_path, seed=37)
-    q, sink_full = run_pipeline_job(
-        spark, src, str(tmp_path / "full"), max_files_per_trigger=1
+    q, sink_full = run(
+        "pipeline", spark, src, str(tmp_path / "full"), max_files_per_trigger=1
     )
     q.processAllAvailable()
     _flush_sentinel(spark, src)
@@ -81,16 +74,10 @@ def test_pipeline_job_exactly_once_resume(spark, tmp_path):
     assert len(want) > 0
 
     work = str(tmp_path / "resumed")
-    q2, _ = run_pipeline_job(spark, src, work, max_files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
+    q2, _ = run("pipeline", spark, src, work, max_files_per_trigger=1)
+    stop_after_batch(q2, 3)  # kill mid-stream
 
-    q3, sink3 = run_pipeline_job(spark, src, work, max_files_per_trigger=1)
+    q3, sink3 = run("pipeline", spark, src, work, max_files_per_trigger=1)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want

@@ -1,4 +1,4 @@
-"""run_quota_job (13th deployable): stream-vs-batch differential on the
+"""The quota deployable (13th): stream-vs-batch differential on the
 per-(source, window) admission table, exactly-once kill/resume.
 
 Quota admission is buffered-release (rows fold in strict global
@@ -8,15 +8,15 @@ buffer — the batch golden excludes the sentinel's source, whose own
 window never closes."""
 
 import datetime
-import time
 
 from parallel_dataflow_spark.sources.sequences import (
     SEQUENCE_SCHEMA,
     read_sequence_table,
     write_sequence_table,
 )
-from parallel_dataflow_spark.streaming.jobs import run_quota_job
+from parallel_dataflow_spark.streaming.jobs import run
 from parallel_dataflow_spark.streaming.stateful import token_quota_batch
+from tests.conftest import stop_after_batch
 
 
 def canon(df):
@@ -38,7 +38,7 @@ def test_quota_job_matches_batch_and_resumes(spark, tmp_path):
     src = str(tmp_path / "src")
     write_sequence_table(spark, src, 2000, seed=31, n_files=8, rows_per_sec=2)
 
-    q, sink = run_quota_job(spark, src, str(tmp_path / "full"))
+    q, sink = run("quota", spark, src, str(tmp_path / "full"))
     q.processAllAvailable()
     _flush_sentinel(spark, src)
     q.processAllAvailable()
@@ -57,16 +57,10 @@ def test_quota_job_matches_batch_and_resumes(spark, tmp_path):
     # final table) batching-invariant, and the latest-wins keyed sink plus
     # running emissions make the replay idempotent
     work = str(tmp_path / "resume")
-    q2, _ = run_quota_job(spark, src, work, max_files_per_trigger=2)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 2:
-            break
-        time.sleep(0.2)
-    q2.stop()
+    q2, _ = run("quota", spark, src, work, max_files_per_trigger=2)
+    stop_after_batch(q2, 2)
 
-    q3, sink3 = run_quota_job(spark, src, work, max_files_per_trigger=2)
+    q3, sink3 = run("quota", spark, src, work, max_files_per_trigger=2)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want

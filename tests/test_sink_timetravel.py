@@ -5,17 +5,14 @@ coverage along the lineage, final as-of == plain read, and replayed
 epochs invisible to as-of readers."""
 
 from parallel_dataflow_spark.sources.sequences import write_sequence_table
-from parallel_dataflow_spark.streaming.jobs import run_tumbling_job
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from parallel_dataflow_spark.streaming.jobs import run
+from tests.conftest import canon
 
 
 def test_as_of_reads_are_monotone_prefixes(spark, tmp_path):
     src = str(tmp_path / "src")
     write_sequence_table(spark, src, 600, seed=111, n_files=6, rows_per_sec=3)
-    q, sink = run_tumbling_job(spark, src, str(tmp_path / "work"), max_files_per_trigger=1)
+    q, sink = run("tumbling", spark, src, str(tmp_path / "work"), max_files_per_trigger=1)
     q.processAllAvailable()
     q.stop()
 

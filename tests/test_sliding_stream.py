@@ -6,10 +6,7 @@ from parallel_dataflow_spark.sources.sequences import (
     write_sequence_table,
 )
 from parallel_dataflow_spark.streaming.windows import sliding_source_stats
-
-
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
+from tests.conftest import canon, stop_after_batch
 
 
 def test_sliding_stream_matches_batch(spark, tmp_path):
@@ -48,17 +45,15 @@ def test_sliding_stream_matches_batch(spark, tmp_path):
 
 
 def test_sliding_job_exactly_once_resume(spark, tmp_path):
-    """run_sliding_job deployable wrapper: uninterrupted == kill+resume
+    """The sliding deployable: uninterrupted == kill+resume
     (same protocol as the tumbling job's exactly-once test)."""
-    import time
-
-    from parallel_dataflow_spark.streaming.jobs import run_sliding_job
+    from parallel_dataflow_spark.streaming.jobs import run
 
     src = str(tmp_path / "src")
     write_sequence_table(spark, src, 2000, seed=7, n_files=8, rows_per_sec=2)
 
-    q, sink_full = run_sliding_job(
-        spark, src, str(tmp_path / "full"), max_files_per_trigger=1
+    q, sink_full = run(
+        "sliding", spark, src, str(tmp_path / "full"), max_files_per_trigger=1
     )
     q.processAllAvailable()
     q.stop()
@@ -69,16 +64,10 @@ def test_sliding_job_exactly_once_resume(spark, tmp_path):
     assert want == canon(golden)
 
     work = str(tmp_path / "resumed")
-    q2, _ = run_sliding_job(spark, src, work, max_files_per_trigger=1)
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
+    q2, _ = run("sliding", spark, src, work, max_files_per_trigger=1)
+    stop_after_batch(q2, 3)  # kill mid-stream
 
-    q3, sink3 = run_sliding_job(spark, src, work, max_files_per_trigger=1)
+    q3, sink3 = run("sliding", spark, src, work, max_files_per_trigger=1)
     q3.processAllAvailable()
     q3.stop()
     assert canon(sink3.read(spark)) == want

@@ -1,4 +1,4 @@
-"""run_spandedup_job (14th deployable): streaming C4-style keep-first
+"""The spandedup deployable (14th): streaming C4-style keep-first
 span dedup. Stream-vs-batch differential on the per-span-hash
 (owner, dup_rows) table, kill/resume exactly-once, batching invariance.
 
@@ -14,17 +14,17 @@ maxFilesPerTrigger, and the batch twin.
 
 import datetime
 import random
-import time
 
 from parallel_dataflow_spark.sources.sequences import (
     SEQUENCE_SCHEMA,
     read_sequence_table,
 )
-from parallel_dataflow_spark.streaming.jobs import run_spandedup_job
+from parallel_dataflow_spark.streaming.jobs import run
 from parallel_dataflow_spark.streaming.spandedup import (
     span_dedup_batch,
     span_prestage,
 )
+from tests.conftest import stop_after_batch
 
 SPAN_W = 4
 BASE = datetime.datetime(2026, 1, 1, 0, 0, 0)
@@ -87,9 +87,7 @@ def test_spandedup_stream_matches_batch_and_resumes(spark, tmp_path):
     src = str(tmp_path / "src")
     _write_fixture(spark, src)
 
-    q, sink = run_spandedup_job(
-        spark, src, str(tmp_path / "full"), span_tokens=SPAN_W
-    )
+    q, sink = run("spandedup", spark, src, str(tmp_path / "full"), span_tokens=SPAN_W)
     q.processAllAvailable()
     _flush_sentinel(spark, src, month=6)
     q.processAllAvailable()
@@ -120,19 +118,13 @@ def test_spandedup_stream_matches_batch_and_resumes(spark, tmp_path):
     # buffered release makes ownership batching-invariant, and running
     # emissions + the latest-wins keyed sink make the replay idempotent
     work = str(tmp_path / "resume")
-    q2, _ = run_spandedup_job(
-        spark, src, work, span_tokens=SPAN_W, max_files_per_trigger=2
+    q2, _ = run(
+        "spandedup", spark, src, work, span_tokens=SPAN_W, max_files_per_trigger=2
     )
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 2:
-            break
-        time.sleep(0.2)
-    q2.stop()
+    stop_after_batch(q2, 2)
 
-    q3, sink3 = run_spandedup_job(
-        spark, src, work, span_tokens=SPAN_W, max_files_per_trigger=2
+    q3, sink3 = run(
+        "spandedup", spark, src, work, span_tokens=SPAN_W, max_files_per_trigger=2
     )
     q3.processAllAvailable()
     # at mft=2 the resumed run takes both earlier sentinels in ONE

@@ -18,13 +18,10 @@ from parallel_dataflow_spark.sources.sequences import (
     read_sequence_table,
     read_sequence_stream,
 )
-from parallel_dataflow_spark.streaming.jobs import (
-    batch_tumbling_golden,
-    run_session_job,
-    run_tumbling_job,
-)
+from parallel_dataflow_spark.streaming.jobs import golden, run
 from parallel_dataflow_spark.streaming import windows as W
 from parallel_dataflow_spark.streaming.metrics import JsonlMetricsListener, read_metrics
+from tests.conftest import canon, stop_after_batch
 
 
 N_ROWS = 3000
@@ -40,10 +37,6 @@ def seq_dir(spark, tmp_path_factory):
     return d
 
 
-def canon(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
 def test_generator_deterministic():
     a = generate_sequences_pandas(500, seed=42)
     b = generate_sequences_pandas(500, seed=42)
@@ -53,19 +46,19 @@ def test_generator_deterministic():
 
 
 def test_tumbling_stream_matches_batch(spark, seq_dir, tmp_path):
-    q, sink = run_tumbling_job(spark, seq_dir, str(tmp_path / "job"))
+    q, sink = run("tumbling", spark, seq_dir, str(tmp_path / "job"))
     q.processAllAvailable()
     q.stop()
     got = canon(sink.read(spark))
-    want = canon(batch_tumbling_golden(spark, seq_dir))
+    want = canon(golden("tumbling", spark, seq_dir))
     assert len(got) == len(want) > 0
     assert got == want
 
 
 def test_exactly_once_resume(spark, seq_dir, tmp_path):
     # uninterrupted run = golden
-    q, sink_full = run_tumbling_job(
-        spark, seq_dir, str(tmp_path / "full"), max_files_per_trigger=1
+    q, sink_full = run(
+        "tumbling", spark, seq_dir, str(tmp_path / "full"), max_files_per_trigger=1
     )
     q.processAllAvailable()
     q.stop()
@@ -73,18 +66,10 @@ def test_exactly_once_resume(spark, seq_dir, tmp_path):
 
     # interrupted run: stop after >=3 batches, then resume from checkpoint
     work = str(tmp_path / "resumed")
-    q2, sink2 = run_tumbling_job(spark, seq_dir, work, max_files_per_trigger=1)
-    import time
+    q2, sink2 = run("tumbling", spark, seq_dir, work, max_files_per_trigger=1)
+    stop_after_batch(q2, 3)  # kill mid-stream
 
-    deadline = time.time() + 120
-    while time.time() < deadline:
-        lp = q2.lastProgress
-        if lp is not None and lp["batchId"] >= 3:
-            break
-        time.sleep(0.2)
-    q2.stop()  # kill mid-stream
-
-    q3, sink3 = run_tumbling_job(spark, seq_dir, work, max_files_per_trigger=1)
+    q3, sink3 = run("tumbling", spark, seq_dir, work, max_files_per_trigger=1)
     q3.processAllAvailable()
     q3.stop()
     got = canon(sink3.read(spark))
@@ -103,7 +88,7 @@ def test_tumbling_rocksdb_state_store(spark, seq_dir, tmp_path):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        q, sink = run_tumbling_job(spark, seq_dir, str(tmp_path / "rocks"))
+        q, sink = run("tumbling", spark, seq_dir, str(tmp_path / "rocks"))
         q.processAllAvailable()
         q.stop()
         got = canon(sink.read(spark))
@@ -112,12 +97,24 @@ def test_tumbling_rocksdb_state_store(spark, seq_dir, tmp_path):
             spark.conf.set(key, old)
         else:
             spark.conf.unset(key)
-    want = canon(batch_tumbling_golden(spark, seq_dir))
+    want = canon(golden("tumbling", spark, seq_dir))
+    assert got == want
+
+
+def test_throughput_stream_matches_batch(spark, seq_dir, tmp_path):
+    """The bench flagship (map-side featurize kernel, salted repartition,
+    window agg): drained sink == the same plan over the table."""
+    q, sink = run("throughput", spark, seq_dir, str(tmp_path / "tput"))
+    q.processAllAvailable()
+    q.stop()
+    got = canon(sink.read(spark))
+    want = canon(golden("throughput", spark, seq_dir))
+    assert len(got) == len(want) > 0
     assert got == want
 
 
 def test_session_stream_finalizes(spark, seq_dir, tmp_path):
-    q, sink = run_session_job(spark, seq_dir, str(tmp_path / "sess"))
+    q, sink = run("session", spark, seq_dir, str(tmp_path / "sess"))
     q.processAllAvailable()
     q.stop()
     got = sink.read(spark)
@@ -245,7 +242,7 @@ def test_metrics_listener(spark, seq_dir, tmp_path):
     listener = JsonlMetricsListener(path)
     spark.streams.addListener(listener)
     try:
-        q, sink = run_tumbling_job(spark, seq_dir, str(tmp_path / "mjob"))
+        q, sink = run("tumbling", spark, seq_dir, str(tmp_path / "mjob"))
         q.processAllAvailable()
         q.stop()
     finally:

@@ -10,6 +10,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from parallel_dataflow_spark.sources import tables
+from tests.conftest import canon
 
 
 def _jobs(spark, fn):
@@ -26,10 +27,6 @@ def _jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
-
-
 def _write(path, **cols):
     pq.write_table(pa.table(cols), str(path))
 
@@ -42,7 +39,7 @@ def test_reread_of_unchanged_table_starts_no_job(spark, tmp_path):
     assert second == 0
     plain = spark.read.parquet(str(tmp_path / "t.parquet"))
     assert df.schema == plain.schema
-    assert _rows(df) == _rows(plain) == [(1, "a"), (2, "b"), (3, "c")]
+    assert canon(df) == canon(plain) == [(1, "a"), (2, "b"), (3, "c")]
 
 
 def test_rewritten_table_is_inferred_again(spark, tmp_path):
@@ -51,7 +48,7 @@ def test_rewritten_table_is_inferred_again(spark, tmp_path):
     _write(tmp_path / "t.parquet", k=[1, 2], extra=[10.5, 20.5])
     df = tables.load_table(spark, str(tmp_path), "t")
     assert df.columns == ["k", "extra"]
-    assert _rows(df) == [(1, 10.5), (2, 20.5)]
+    assert canon(df) == [(1, 10.5), (2, 20.5)]
 
 
 def test_inference_conf_is_part_of_the_key(spark, tmp_path):
@@ -64,7 +61,7 @@ def test_inference_conf_is_part_of_the_key(spark, tmp_path):
         spark.conf.set(conf, "true")
         df = tables.load_table(spark, str(tmp_path), "t")
         assert df.dtypes == [("b", "string")]
-        assert _rows(df) == [("xy",), ("z",)]
+        assert canon(df) == [("xy",), ("z",)]
     finally:
         spark.conf.set(conf, before)
 
@@ -78,13 +75,13 @@ def test_directory_table_with_a_new_file_is_inferred_again(spark, tmp_path):
     spark.range(6, 8).write.mode("append").parquet(path)
     df, grown = _jobs(spark, lambda: tables.load_table(spark, str(tmp_path), "d"))
     assert grown == 1
-    assert _rows(df) == [(i,) for i in range(8)]
+    assert canon(df) == [(i,) for i in range(8)]
 
 
 def test_uri_path_reads_through_the_fallback(spark, tmp_path):
     _write(tmp_path / "t.parquet", k=[2, 1])
     uri = f"file://{tmp_path}"
     df, jobs = _jobs(spark, lambda: tables.load_table(spark, uri, "t"))
-    assert _rows(df) == [(1,), (2,)]
+    assert canon(df) == [(1,), (2,)]
     _, again = _jobs(spark, lambda: tables.load_table(spark, uri, "t"))
     assert jobs == again == 1  # inferred on every read
